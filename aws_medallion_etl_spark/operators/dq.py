@@ -1,8 +1,7 @@
 """Data-quality assertions shared across layers.
 
 The gate-style checks that raise before any write (reference:
-``Meta_Guideline.md:2987-3030``; SCD2 non-overlap / NK rules
-``requirements/meta/meta_module_06_requirements.md:109-111``). The
+``Meta_Guideline.md:2987-3030``). The
 fact-specific invariants (grain / balance / non-negative) live in
 ``operators.facts``; this module holds the cross-cutting ones.
 """
@@ -31,50 +30,6 @@ def check_unique(df: DataFrame, cols: list[str], label: str = "") -> None:
     if row["n"] != row["d"]:
         raise UniquenessViolation(
             f"{label or cols}: {row['n']} rows but {row['d']} distinct {cols}"
-        )
-
-
-def check_no_nulls(df: DataFrame, cols: list[str]) -> None:
-    """Assert no NULLs in ``cols`` (NK/PK non-null rule) — one scan."""
-    row = df.agg(
-        *[F.sum(F.col(c).isNull().cast("long")).alias(c) for c in cols]
-    ).collect()[0]
-    bad = {c: row[c] for c in cols if row[c]}
-    if bad:
-        raise UniquenessViolation(f"NULLs in non-nullable columns: {bad}")
-
-
-def check_scd2_no_overlap(
-    df: DataFrame,
-    nk: list[str],
-    start_col: str = "effective_start_ts",
-    end_col: str = "effective_end_ts",
-    current_col: str = "is_current",
-) -> None:
-    """Assert SCD2 validity windows per key neither overlap nor leave gaps,
-    and exactly one current row exists per key (``requirements/...:109-110``).
-
-    One window pass ordered by start: each row's end must equal the next
-    row's start (contiguous, non-overlapping), and only the last row may
-    be current.
-    """
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(*nk).orderBy(start_col)
-    nxt = F.lead(start_col).over(w)
-    bad = (
-        df.withColumn("__next_start", nxt)
-        .filter(
-            (F.col("__next_start").isNotNull() & (F.col(end_col) != F.col("__next_start")))
-            | (F.col("__next_start").isNotNull() & F.col(current_col))
-            | (F.col("__next_start").isNull() & ~F.col(current_col))
-        )
-        .limit(1)
-        .count()
-    )
-    if bad:
-        raise UniquenessViolation(
-            f"SCD2 windows for {nk} overlap, gap, or mis-flag {current_col}"
         )
 
 

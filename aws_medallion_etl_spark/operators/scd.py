@@ -241,13 +241,6 @@ def with_unknown_row(
     return unknown.unionByName(dim)
 
 
-def scd1_latest(df: DataFrame, nk: list[str], order_by: list[str]) -> DataFrame:
-    """SCD Type 1: keep only the newest attribute values per key."""
-    from aws_medallion_etl_spark.operators.dedup import dedup_max_by
-
-    return dedup_max_by(df, nk, order_by)
-
-
 def scd1_upsert(
     snapshot: DataFrame,
     changes: DataFrame,

@@ -94,10 +94,9 @@ def cosine_topk_bruteforce(
 def _hyperplane_values(plane: int, dim: int) -> list[float]:
     """Deterministic pseudo-random hyperplane components in [-1, 1).
 
-    Generated driver-side (splitmix64 over the (plane, j) index) and
-    shipped as literals — Catalyst constant-folds the array, so rows
-    pay only the dot product, never hyperplane construction. Zero RNG
-    state: any cluster reproduces the same planes.
+    Generated from the (plane, j) index by splitmix64, so the bucket
+    UDF rebuilds the planes on every executor. Zero RNG state: any
+    cluster reproduces the same planes.
     """
     out = []
     for j in range(dim):
@@ -107,25 +106,6 @@ def _hyperplane_values(plane: int, dim: int) -> list[float]:
         z ^= z >> 31
         out.append((z / float(1 << 63)) - 1.0)
     return out
-
-
-def _hyperplane(plane: int, dim: int) -> Column:
-    return F.array(*[F.lit(v) for v in _hyperplane_values(plane, dim)])
-
-
-def lsh_bucket(vec: Column, planes: int, dim: int, table: int = 0) -> Column:
-    """Sign-bit bucket id from ``planes`` random hyperplanes.
-
-    ``table`` offsets the hyperplane seeds so multiple independent
-    hash tables can be derived from the same function.
-    """
-    bucket = F.lit(0).cast("long")
-    for p in range(planes):
-        bit = F.when(
-            dot(vec, _hyperplane(table * planes + p, dim)) >= 0, F.lit(1)
-        ).otherwise(F.lit(0))
-        bucket = F.shiftleft(bucket, 1) + bit
-    return bucket
 
 
 def _bucket_udf(planes: int, dim: int, tables: int):

@@ -32,10 +32,6 @@ def token_count(col: Column | str) -> Column:
     return F.size(F.split(F.trim(_c(col)), r"\s+"))
 
 
-def char_count(col: Column | str) -> Column:
-    return F.length(_c(col))
-
-
 def avg_word_length(col: Column | str, ndigits: int = 4) -> Column:
     """Mean token length: (chars - spaces) / tokens."""
     c = _c(col)

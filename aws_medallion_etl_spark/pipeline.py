@@ -18,10 +18,11 @@ test "re-run ⇒ no duplicates" (``requirements/...:143``).
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-from typing import Callable
+from typing import Callable, Sequence
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from aws_medallion_etl_spark import io
 from aws_medallion_etl_spark.operators import dedup, dq, validate
@@ -93,8 +94,12 @@ def _table_path(out_dir: str, layer: str, table: str) -> str:
     return f"{out_dir}/{layer}/{table}"
 
 
-def require_layer_ok(out_dir: str, layer: str, tables: list[str], run_date: str) -> None:
-    """C2: fail fast unless every upstream table reported status=ok."""
+def require_layer_ok(
+    out_dir: str, layer: str, tables: list[str], run_date: str
+) -> dict[str, dict]:
+    """C2: fail fast unless every upstream table reported status=ok.
+    Returns the upstream reports by table."""
+    reports = {}
     for t in tables:
         try:
             report = io.read_json_report(f"{out_dir}/{layer}", t, run_date)
@@ -110,6 +115,26 @@ def require_layer_ok(out_dir: str, layer: str, tables: list[str], run_date: str)
                 {"run_date": run_date, "error": f"status={report.get('status')}"},
             )
             raise GateFailure(f"{layer}/{t}: status={report.get('status')}")
+        reports[t] = report
+    return reports
+
+
+def _observed(
+    df: DataFrame, run_date: str, flag_cols: Sequence[str] = ()
+) -> tuple[DataFrame, Observation]:
+    """Count, during the write itself, the rows ``df`` lands in
+    ``run_date``'s partition, plus the sum of each flag column over
+    them — the figures a read-back of that partition would give,
+    without a second job. Matching on the partition value (rather than
+    counting every row) keeps a builder frame that carries its own
+    ``run_date`` column reported as its one partition."""
+    obs = Observation()
+    in_part = F.col("run_date").cast("string") == F.lit(run_date)
+    return df.observe(
+        obs,
+        F.count_if(in_part).alias("n"),
+        *[F.sum(F.when(in_part, F.col(c).cast("long"))).alias(c) for c in flag_cols],
+    ), obs
 
 
 def run_bronze_table(
@@ -123,7 +148,11 @@ def run_bronze_table(
 
     The tagged frame is persisted for the duration of the stage so the
     gate aggregate, the valid write, and the reject write share ONE
-    scan of the source (the reference re-reads per action).
+    scan of the source (the reference re-reads per action). Nothing is
+    read back: the report's ``valid`` count is exactly the row count of
+    the written ``run_date`` partition, and its ``schema`` (the valid
+    frame's, as JSON) lets silver read that partition without a
+    parquet footer-inference job.
     """
     base = f"{out_dir}/bronze"
     tagged = validate.tag_rejects(source, spec.rules()).persist()
@@ -140,7 +169,10 @@ def run_bronze_table(
         )
         rejects = tagged.filter(F.col(validate.REJECT_REASON).isNotNull())
         io.write_rejects(rejects, base, spec.name, run_date)
-        report = {"status": "ok", "layer": "bronze", **stats}
+        report = {
+            "status": "ok", "layer": "bronze", **stats,
+            "schema": valid.schema.jsonValue(),
+        }
     except validate.CircuitBreakerError as e:
         report = {"status": "failed", "layer": "bronze", "error": str(e)}
         io.write_json_report(report, base, spec.name, run_date)
@@ -164,52 +196,58 @@ def run_silver_table(
 ) -> dict:
     """Gate on bronze → NK dedup (keep newest) → clean → write + report.
 
+    Every count in the report comes from work the stage does anyway:
+    ``rows_in`` is the bronze report's ``valid`` count (bronze wrote
+    exactly those rows into this ``run_date`` partition), and
+    ``rows_out`` plus the per-strategy counters ride the silver write
+    as an ``Observation``. Nothing is read back. Bronze is read with
+    the schema its report recorded; a report from before that key
+    existed falls back to an inferred read.
+
     ``fingerprints=True`` adds the additive content checksum
     (``dq.dataset_fingerprint``) to the report for run-over-run drift
-    compares. It is OPT-IN because it changes the read-back from a
-    metadata-only count (parquet count-star reads row-group footers,
-    no data pages) into a full all-column scan + md5 of the partition
-    — at 100 TB that is a deliberate audit pass, not a default tax
-    (measured +2.2 s of the 10 s sf0.1 e2e run).
+    compares. It is OPT-IN because it reads the written partition back
+    in a full all-column scan + md5 — at 100 TB that is a deliberate
+    audit pass, not a default tax (measured +2.2 s of the 10 s sf0.1
+    e2e run).
     """
-    require_layer_ok(out_dir, "bronze", [spec.name], run_date)
-    df = io.read_parquet(spark, _table_path(out_dir, "bronze", spec.name)).where(
+    bronze = require_layer_ok(out_dir, "bronze", [spec.name], run_date)[spec.name]
+    reader = spark.read
+    if "schema" in bronze:
+        reader = reader.schema(StructType.fromJson(bronze["schema"]))
+    df = reader.parquet(_table_path(out_dir, "bronze", spec.name)).where(
         F.col("run_date") == run_date
     )
-    n_in = df.count()
+    n_in = bronze["valid"]
     if spec.nk:
         df = dedup.dedup_max_by(
             df.drop("run_date"), spec.nk, spec.dedup_order or spec.nk
         ).withColumn("run_date", F.lit(run_date))
     if spec.clean is not None:
         df = spec.clean(df)
+    # Per-strategy counters (reference silver reports,
+    # Meta_Guideline.md:1643-1650): any *_was_imputed flag the clean
+    # hook added is summed on the write, next to the row count.
+    flag_cols = [c for c in df.columns if c.endswith("_was_imputed")]
+    df, obs = _observed(df, run_date, flag_cols)
     io.write_parquet(
         df, _table_path(out_dir, "silver", spec.name), partition_by=["run_date"]
     )
-    written = io.read_parquet(spark, _table_path(out_dir, "silver", spec.name)).where(
-        F.col("run_date") == run_date
-    )
+    counts = obs.get
+    n_out = counts["n"]
     report = {"status": "ok", "layer": "silver", "rows_in": n_in}
     if fingerprints:
-        # one read-back scan yields BOTH the row count and the additive
-        # content checksum (dq.dataset_fingerprint): run-over-run drift
-        # in this partition is a 1-row compare of consecutive reports
+        # run-over-run drift in this partition is a 1-row compare of
+        # consecutive reports' checksums
+        written = io.read_parquet(
+            spark, _table_path(out_dir, "silver", spec.name)
+        ).where(F.col("run_date") == run_date)
         fp = dq.dataset_fingerprint(written).collect()[0]
-        n_out = fp["n_rows"]
         report["fingerprint"] = str(fp["fingerprint"])
-    else:
-        n_out = written.count()
     report["rows_out"] = n_out
     report["deduped"] = n_in - n_out
-    # Per-strategy counters (reference silver reports,
-    # Meta_Guideline.md:1643-1650): any *_was_imputed flag the clean
-    # hook added is counted in ONE scan of the written partition.
-    flag_cols = [c for c in written.columns if c.endswith("_was_imputed")]
     if flag_cols:
-        from aws_medallion_etl_spark.operators import clean as clean_ops
-
-        counts = clean_ops.strategy_counts(written, flag_cols)
-        report["strategy_counts"] = {k: v for k, v in counts.items() if k != "total"}
+        report["strategy_counts"] = {c: counts[c] or 0 for c in flag_cols}
     io.write_json_report(report, f"{out_dir}/silver", spec.name, run_date)
     return report
 
@@ -226,9 +264,10 @@ def run_gold(
 
     ``builders`` maps gold table name → fn(spark, out_dir, run_date)
     returning the frame to write (dims, facts, KPIs).
-    ``fingerprints`` as in :func:`run_silver_table` — opt-in content
-    checksums in the report (full read-back scan instead of the
-    metadata-only parquet count).
+    ``tables[name]`` is counted on the write (an ``Observation``), so
+    nothing is read back. ``fingerprints`` as in
+    :func:`run_silver_table` — opt-in content checksums in the report,
+    from a full read-back scan of each written partition.
     """
     require_layer_ok(out_dir, "silver", upstream_tables, run_date)
     report: dict = {"status": "ok", "layer": "gold", "tables": {}}
@@ -238,25 +277,23 @@ def run_gold(
         df = build(spark, out_dir, run_date)
         if "run_date" not in df.columns:
             df = df.withColumn("run_date", F.lit(run_date))
+        df, obs = _observed(df, run_date)
         io.write_parquet(
             df, _table_path(out_dir, "gold", name), partition_by=["run_date"]
         )
-        written = io.read_parquet(spark, _table_path(out_dir, "gold", name)).where(
-            F.col("run_date") == run_date
-        )
+        report["tables"][name] = obs.get["n"]
         if fingerprints:
-            # count + content checksum in the same read-back scan (see
-            # run_silver_table); gold KPI drift surfaces as a report diff
+            # gold KPI drift surfaces as a report diff (see run_silver_table)
+            written = io.read_parquet(spark, _table_path(out_dir, "gold", name)).where(
+                F.col("run_date") == run_date
+            )
             fp = dq.dataset_fingerprint(written).collect()[0]
-            report["tables"][name] = fp["n_rows"]
             report["fingerprints"][name] = str(fp["fingerprint"])
-        else:
-            report["tables"][name] = written.count()
     io.write_json_report(report, f"{out_dir}/gold", "_all", run_date)
     return report
 
 
-def _run_layer(stages: dict[str, Callable[[], dict]],
+def _run_layer(spark: SparkSession, stages: dict[str, Callable[[], dict]],
                max_workers: int) -> dict[str, dict]:
     """Run one layer's independent per-table stages, overlapped.
 
@@ -268,15 +305,22 @@ def _run_layer(stages: dict[str, Callable[[], dict]],
     stays deterministic: every stage runs to completion (a failing
     table still writes its own failed report, exactly as sequential
     order did for tables before it), then the FIRST failure in spec
-    order is re-raised."""
+    order is re-raised. Each stage runs with the caller's Spark local
+    properties (``inheritable_thread_target``), so its jobs stay in the
+    caller's job group and a ``cancelJobGroup`` reaches them."""
     if max_workers <= 1 or len(stages) <= 1:
         return {n: fn() for n, fn in stages.items()}
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark import inheritable_thread_target
+
     with ThreadPoolExecutor(
         max_workers=min(max_workers, len(stages))
     ) as pool:
-        futs = {n: pool.submit(fn) for n, fn in stages.items()}
+        futs = {
+            n: pool.submit(inheritable_thread_target(spark)(fn))
+            for n, fn in stages.items()
+        }
         results: dict[str, dict] = {}
         first_err: BaseException | None = None
         for n, f in futs.items():
@@ -320,6 +364,7 @@ def run_pipeline(
     """
     reports: dict = {"bronze": {}, "silver": {}, "gold": None}
     reports["bronze"] = _run_layer(
+        spark,
         {
             name: (lambda s=spec, n=name: run_bronze_table(
                 spark, s, sources[n], out_dir, run_date
@@ -329,6 +374,7 @@ def run_pipeline(
         layer_concurrency,
     )
     reports["silver"] = _run_layer(
+        spark,
         {
             name: (lambda s=spec: run_silver_table(
                 spark, s, out_dir, run_date, fingerprints=fingerprints

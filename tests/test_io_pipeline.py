@@ -176,7 +176,7 @@ def test_pipeline_end_to_end_and_idempotent(spark, sf_dir, tmp_path):
         assert (reports["silver"][t]["fingerprint"]
                 == reports2["silver"][t]["fingerprint"])
     # default (fingerprints off): same counts, no checksum fields, and
-    # the read-back stays a metadata-only parquet count
+    # no read-back at all: the counts ride the writes
     reports3 = pipeline.run_pipeline(
         spark, sources, _specs(), _gold_builders(), out, "2024-06-01"
     )
@@ -210,6 +210,124 @@ def test_silver_clean_hook_reports_strategy_counts(spark, tmp_path):
     assert io.read_json_report(f"{out}/silver", "t", "2024-06-01")[
         "strategy_counts"
     ] == {"country_was_imputed": 2}
+
+
+def _tiny_pipeline_inputs(spark):
+    """Two tables: orders with one duplicate key and one reject, and a
+    zero-row returns table; one gold count over silver orders."""
+    orders = spark.createDataFrame(
+        [(1, "a", 10.0), (1, "b", 12.0), (2, "a", 5.0), (3, "c", -1.0), (4, "b", 7.0)],
+        "o_orderkey int, o_status string, o_totalprice double",
+    )
+    returns = spark.createDataFrame([], "r_orderkey int, r_reason string")
+    specs = {
+        "orders": pipeline.TableSpec(
+            name="orders",
+            rules=lambda: [validate.Rule("negative_price", F.col("o_totalprice") < 0)],
+            nk=["o_orderkey"],
+            dedup_order=["o_totalprice"],
+            reject_threshold=0.5,
+        ),
+        "returns": pipeline.TableSpec(name="returns", nk=["r_orderkey"]),
+    }
+
+    def orders_by_status(spark, out_dir, run_date):
+        return (
+            spark.read.parquet(f"{out_dir}/silver/orders")
+            .where(F.col("run_date") == run_date)
+            .groupBy("o_status")
+            .agg(F.count(F.lit(1)).alias("n"))
+        )
+
+    sources = {"orders": orders, "returns": returns}
+    return sources, specs, {"orders_by_status": orders_by_status}
+
+
+def _total_jobs(spark) -> int:
+    return spark.sparkContext._jsc.sc().dagScheduler().numTotalJobs()
+
+
+def test_pipeline_reports_count_on_the_write(spark, tmp_path):
+    """Stage reports take every count from work the stage already does:
+    no written partition is read back, and bronze's recorded schema
+    spares silver the footer-inference job. The job count is pinned so
+    a read-back cannot creep back in."""
+    out = str(tmp_path / "lake_counts")
+    run_date = "2024-06-01"
+    sources, specs, builders = _tiny_pipeline_inputs(spark)
+    jobs0 = _total_jobs(spark)
+    reports = pipeline.run_pipeline(spark, sources, specs, builders, out, run_date)
+    assert _total_jobs(spark) - jobs0 == 14
+
+    def partition(layer, table):
+        return spark.read.parquet(f"{out}/{layer}/{table}").where(
+            F.col("run_date") == run_date
+        ).count()
+
+    silver = reports["silver"]["orders"]
+    assert silver["rows_in"] == partition("bronze", "orders") == 4
+    assert silver["rows_out"] == partition("silver", "orders") == 3
+    assert silver["deduped"] == partition("bronze", "orders") - partition("silver", "orders")
+    assert reports["gold"]["tables"] == {
+        "orders_by_status": partition("gold", "orders_by_status")
+    }
+    # a zero-row source table runs every layer and reports zeros
+    assert reports["bronze"]["returns"]["valid"] == 0
+    empty = reports["silver"]["returns"]
+    assert (empty["rows_in"], empty["rows_out"], empty["deduped"]) == (0, 0, 0)
+
+
+def test_run_layer_keeps_caller_job_group(spark, tmp_path):
+    """Table stages on pool threads inherit the caller's job group, so
+    ``cancelJobGroup`` on a pipeline run reaches every job of it."""
+    sc = spark.sparkContext
+    sources, specs, builders = _tiny_pipeline_inputs(spark)
+    group = "pipeline-job-group-test"
+    sc.setJobGroup(group, "run_pipeline under a job group")
+    try:
+        jobs0 = _total_jobs(spark)
+        pipeline.run_pipeline(
+            spark, sources, specs, builders, str(tmp_path / "lake_group"),
+            "2024-06-01", layer_concurrency=3,
+        )
+        jobs = _total_jobs(spark) - jobs0
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+    assert jobs > 0
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == jobs
+
+
+def test_silver_reads_bronze_report_without_schema(spark, tmp_path):
+    """A bronze report written before the ``schema`` key existed still
+    gates silver, which then infers the bronze schema from the files
+    (one more job) and reports the same counts."""
+    import json
+
+    out = str(tmp_path / "lake_old_report")
+    run_date = "2024-06-01"
+    sources, specs, _ = _tiny_pipeline_inputs(spark)
+    spec = specs["orders"]
+    pipeline.run_bronze_table(spark, spec, sources["orders"], out, run_date)
+    jobs0 = _total_jobs(spark)
+    new = pipeline.run_silver_table(spark, spec, out, run_date)
+    jobs_new = _total_jobs(spark) - jobs0
+
+    path = f"{out}/bronze/_reports/run_date={run_date}/orders_report.json"
+    with open(path) as f:
+        report = json.load(f)
+    del report["schema"]
+    with open(path, "w") as f:
+        json.dump(report, f)
+    jobs0 = _total_jobs(spark)
+    old = pipeline.run_silver_table(spark, spec, out, run_date)
+    assert _total_jobs(spark) - jobs0 == jobs_new + 1
+    assert {k: old[k] for k in ("rows_in", "rows_out", "deduped")} == {
+        k: new[k] for k in ("rows_in", "rows_out", "deduped")
+    }
+    assert spark.read.parquet(f"{out}/silver/orders").count() == new["rows_out"]
 
 
 def test_pipeline_gate_blocks_on_missing_bronze(spark, sf_dir, tmp_path):
