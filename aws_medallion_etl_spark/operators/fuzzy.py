@@ -28,16 +28,24 @@ from aws_medallion_etl_spark._ckpt import (
 )
 
 
-def _run_overlapped(*thunks) -> None:
+def _run_overlapped(spark, *thunks) -> None:
     """Run independent Spark actions concurrently from driver threads
     (guide §2.6 "overlap independent jobs"): the scheduler back-fills
     one job's straggler tail with the other's tasks, so a pair of
     fixed-latency writes costs the slower one, not the sum. Joins all
-    threads before returning and re-raises the first failure."""
+    threads before returning and re-raises the first failure. Each
+    thunk runs with the caller's Spark local properties
+    (``inheritable_thread_target``), so its jobs stay in the caller's
+    job group."""
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark import inheritable_thread_target
+
     with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
-        for f in [pool.submit(t) for t in thunks]:
+        futs = [
+            pool.submit(inheritable_thread_target(spark)(t)) for t in thunks
+        ]
+        for f in futs:
             f.result()
 
 
@@ -1354,6 +1362,7 @@ def build_minhash_index(
         # still happens only after BOTH succeed (pool join), so the
         # crash contract is unchanged
         _run_overlapped(
+            corpus.sparkSession,
             lambda: b.write.mode("overwrite").parquet(f"{path}/bands"),
             lambda: sh.groupBy("shingle")
             .agg(F.count(F.lit(1)).alias("__df"))
@@ -1408,6 +1417,7 @@ def append_to_minhash_index(
         # contract is unchanged in kind: a failure mid-append already
         # meant "rebuild the index" whichever append died first.
         _run_overlapped(
+            spark,
             lambda: b.write.mode("append").parquet(f"{path}/bands"),
             lambda: sh.groupBy("shingle")
             .agg(F.count(F.lit(1)).alias("__df"))
@@ -1434,6 +1444,7 @@ def compact_minhash_index(spark, path: str, target_files: int = 32) -> None:
     # staging siblings, separate swaps) — overlap the rewrites
     # (guide §2.6); each one's crash-safe stage+swap is untouched
     _run_overlapped(
+        spark,
         lambda: _io.compact(
             spark,
             f"{path}/shingle_df",

@@ -465,12 +465,9 @@ def str6_stream_stream_join(spark, sf_dir):
     # size state partitions to key cardinality, the standard streaming
     # tuning, instead of inheriting the batch shuffle width. Set at
     # query START: the checkpoint pins it for the query's lifetime.
-    saved = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        streaming.to_memory_sink(pairs, "str6_pairs", output_mode="append")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", saved)
+    streaming.to_memory_sink(
+        pairs, "str6_pairs", output_mode="append", shuffle_partitions=8
+    )
     return (
         spark.table("str6_pairs")
         .groupBy("user_id")

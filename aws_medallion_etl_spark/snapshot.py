@@ -60,7 +60,10 @@ Layout::
   writes ~100 positions + the new rows, not 1 GB. :func:`compact`
   (OPTIMIZE) rewrites DV-carrying and undersized files to purge the
   debt; time travel to pre-delete versions reads the undeleted rows
-  because old manifests don't reference the new sidecar.
+  because old manifests don't reference the new sidecar. DELETE,
+  UPDATE and REPLACE WHERE share one row-level rewrite core
+  (:func:`_rewrite_matched`): matching live rows die and the verb's
+  rows land, in one commit.
 
 Differences from Delta, stated honestly: schema evolution on merge is
 add-column only (``schema_evolution=True``; no retype), deletion
@@ -549,9 +552,9 @@ def _mint_dv(
     sidecar path, per-file TOTAL dead rows (the touched entries' new
     ``dv_rows``), and per-file rows newly marked by THIS call (the
     user-facing deleted/updated counts). Empty ``hits`` → empty
-    sidecar dir, both dicts empty — the caller removes the dir on its
-    zero path. Both counts come from the WRITTEN sidecar, so the
-    manifest can never disagree with the bytes on disk.
+    sidecar dir, both dicts empty — :func:`_mark_dead` removes it.
+    Both counts come from the WRITTEN sidecar, so the manifest can
+    never disagree with the bytes on disk.
     """
     from pyspark.sql import Window
 
@@ -668,6 +671,42 @@ def _mint_dv(
         for f, c in totals.items() if c - prior_rows.get(f, 0) > 0
     }
     return dv_rel, totals, new_counts
+
+
+def _mark_dead(
+    spark: SparkSession,
+    root: str,
+    entries: list[dict],
+    hits: DataFrame,
+    new_v: int,
+    carry: bool = True,
+) -> tuple[dict[str, dict], dict[str, int]]:
+    """Mark ``hits`` dead in this commit's sidecar (:func:`_mint_dv`)
+    and return ``(marked, counts)``: the touched entries keyed by file
+    with the sidecar ref attached, and the rows newly dead per file.
+    An empty mint removes its sidecar dir (nothing may reference it).
+
+    ``carry=True`` (merge-on-read) yields the entries the manifest
+    commits: the coalesced ref replaces the file's refs and
+    ``dv_rows`` is its new total. ``carry=False`` (copy-on-write)
+    mints only this commit's hits, so the ref is APPENDED to the
+    file's own refs — a scan-only view of the file's survivors that
+    the rewrite reads and no manifest ever references."""
+    dv_rel, totals, counts = _mint_dv(
+        spark, root, entries, hits, new_v, carry=carry
+    )
+    if not counts:
+        import shutil
+
+        shutil.rmtree(os.path.join(root, dv_rel), ignore_errors=True)
+    marked = {
+        e["file"]: dict(
+            e, dv=[dv_rel] if carry else [*(e.get("dv") or []), dv_rel],
+            dv_rows=totals[e["file"]],
+        )
+        for e in entries if e["file"] in counts
+    }
+    return marked, counts
 
 
 def _phys(colmap: dict | None, logical: str) -> str:
@@ -1338,13 +1377,13 @@ def _rebase_commit(
     first_version: int,
     base_v: int,
     base_man: dict,
-    fields_fn,
     op_fields: dict,
     stats_cols: list[str],
     txn: tuple[str, int] | None,
     removed: set[str],
     updated: dict[str, dict],
     added: list[dict],
+    fields_fn=None,
     appends_ok: bool = False,
     key_bounds_fn=None,
     max_retries: int = 3,
@@ -1357,7 +1396,8 @@ def _rebase_commit(
     The commit is expressed as a file-set transformation
     (``removed`` / ``updated`` / ``added``) plus version-independent
     manifest fields (``fields_fn()`` — schema/colmap/etc., constant
-    under rebase because metadata drift is a conflict). On a lost
+    under rebase because metadata drift is a conflict; None carries
+    the base manifest's metadata unchanged). On a lost
     race the transformation re-applies onto the WINNER's entry list
     after :func:`_check_rebase_safe` proves the winner's commits
     could not have invalidated this write's reads; data files and DV
@@ -1379,6 +1419,12 @@ def _rebase_commit(
     """
     cur_v, cur_man, new_v = base_v, base_man, first_version
     key_bounds = None
+    meta = fields_fn() if fields_fn is not None else {
+        "schema": base_man["schema"],
+        **_constraint_fields(base_man),
+        **_generated_fields(base_man),
+        **_colmap_fields(base_man),
+    }
     for attempt in range(max_retries + 1):
         entries = _compose_entries(
             _manifest_files(path, cur_man), removed, updated, added
@@ -1390,7 +1436,7 @@ def _rebase_commit(
             _commit(path, new_v, {
                 "version": new_v,
                 "columns": stats_cols,
-                **fields_fn(),
+                **meta,
                 **_txn_fields(cur_man, txn),
                 **rt_f,
                 **op_fields,
@@ -2499,6 +2545,28 @@ def _touched_files(
     return touched, untouched
 
 
+def _dml_base(
+    verb: str, path: str, mode: str, txn: tuple[str, int] | None,
+    mode_arg: str = "mode",
+) -> tuple[int, dict, int | None]:
+    """The DML verbs' shared opening: the ``mor``/``cow`` mode check,
+    the base manifest, and the idempotent-writer replay check. Returns
+    ``(base_v, man, seen)`` where ``seen`` is the app's high-water
+    mark when ``txn`` is a replay at or below it (the verb skips), else
+    None."""
+    if mode not in {"mor", "cow"}:
+        raise ValueError(f"{verb}: unknown {mode_arg}={mode!r}")
+    vs = snapshot_versions(path)
+    if not vs:
+        raise ValueError(f"{verb}: {path} is not a snapshot table")
+    man = _read_manifest(path, vs[-1])
+    if txn is not None:
+        seen = man.get("txn", {}).get(str(txn[0]))
+        if seen is not None and int(txn[1]) <= int(seen):
+            return vs[-1], man, int(seen)
+    return vs[-1], man, None
+
+
 def merge_into(
     spark: SparkSession,
     path: str,
@@ -2644,18 +2712,11 @@ def merge_into(
     conditional = (matched_delete_where is not None
                    or insert_where is not None
                    or matched_update_where is not None)
-    if write_mode not in {"cow", "mor"}:
-        raise ValueError(f"merge_into: unknown write_mode={write_mode!r}")
-    vs = snapshot_versions(path)
-    if not vs:
-        raise ValueError(f"merge_into: {path} is not a snapshot table")
-    base_v = vs[-1]
-    man = _read_manifest(path, base_v)
-    if txn is not None:
-        seen = man.get("txn", {}).get(str(txn[0]))
-        if seen is not None and int(txn[1]) <= int(seen):
-            return {"version": base_v, "skipped": True,
-                    "txn_high_water": int(seen)}
+    base_v, man, seen = _dml_base(
+        "merge_into", path, write_mode, txn, mode_arg="write_mode"
+    )
+    if seen is not None:
+        return {"version": base_v, "skipped": True, "txn_high_water": seen}
     schema = StructType.fromJson(json.loads(man["schema"]))
     tcols = [f.name for f in schema.fields]
     # GENERATED ALWAYS AS: compute absent generated columns from the
@@ -2823,42 +2884,29 @@ def merge_into(
     if append_only:
         carried += list(touched)
         parts = []
-    elif mor:
-        acting_src = (
-            src.where(act_pred) if when_matched == "update" else src
-        )
-        matched = tgt.join(acting_src.select(*on), on, "semi").select(
-            F.col("__file").alias("file"), F.col("__pos").alias("row_index")
-        )
-        dv_rel, dv_totals, dv_counts = _mint_dv(
-            spark, root, touched, matched, new_v
-        )
-        for e in touched:
-            if e["file"] in dv_totals:
-                e = dict(e)
-                e["dv"] = [dv_rel]          # coalesced: one ref per file
-                e["dv_rows"] = dv_totals[e["file"]]
-                updated_entries[e["file"]] = e
-            carried.append(e)
-        parts = []
-        if when_matched == "update":
-            # conditional delete: the acting row's position is already
-            # DV'd; rewriting only the upd_pred rows makes non-updated
-            # acting rows deletes, and NON-acting matched rows were
-            # never DV'd at all (matched_update_where leaves them be)
-            upd = (src.join(rid_map, on) if rt_pass
-                   else src.join(tgt_keys, on, "semi"))
-            parts.append(upd.where(upd_pred))
     else:
-        acting_src = (
+        acting_keys = (
             src.where(act_pred) if when_matched == "update" else src
-        )
-        kept = tgt.join(acting_src.select(*on), on, "left_anti")
-        parts = [kept]
+        ).select(*on)
+        if mor:
+            matched = tgt.join(acting_keys, on, "semi").select(
+                F.col("__file").alias("file"),
+                F.col("__pos").alias("row_index"),
+            )
+            updated_entries, dv_counts = _mark_dead(
+                spark, root, touched, matched, new_v
+            )
+            carried += [updated_entries.get(e["file"], e) for e in touched]
+            parts = []
+        else:
+            parts = [tgt.join(acting_keys, on, "left_anti")]
         if when_matched == "update":
-            # conditional delete under cow: the touched file is
-            # rewritten without the acting row either way; non-acting
-            # matched rows ride the kept set untouched
+            # conditional delete: the acting row is DV'd (mor) or left
+            # out of the rewrite (cow) either way; landing only the
+            # upd_pred rows makes non-updated acting rows deletes, and
+            # NON-acting matched rows are never touched
+            # (matched_update_where leaves them be; under cow they
+            # ride the kept set)
             upd = (src.join(rid_map, on) if rt_pass
                    else src.join(tgt_keys, on, "semi"))
             parts.append(upd.where(upd_pred))
@@ -2935,6 +2983,111 @@ def merge_into(
     }
 
 
+def _rewrite_matched(
+    spark: SparkSession,
+    path: str,
+    base_v: int,
+    man: dict,
+    predicate,
+    mode: str,
+    txn: tuple[str, int] | None,
+    op: tuple[str, str],
+    produce=None,
+    insert: DataFrame | None = None,
+) -> dict:
+    """The row-level rewrite behind DELETE / UPDATE / REPLACE WHERE:
+    live rows matching ``predicate`` die and the rows the verb
+    produces land, in ONE commit.
+
+    ``produce(matched)`` (UPDATE) derives the landing rows from the
+    matched live rows; under row tracking ``matched`` carries
+    ``_row_id`` and the produced rows must keep it (the rows keep
+    their identity). ``insert`` (REPLACE WHERE) is a fixed frame: it
+    lands even when nothing matches, and its rows mint fresh ids.
+    With neither (DELETE) nothing lands. ``op`` is the history name
+    and the count key of the verb's report.
+
+    ``mode="mor"`` marks the matched positions in a coalesced DV
+    sidecar and lands the new rows as new files; ``mode="cow"``
+    rewrites each touched file's survivors — read through the file's
+    own refs plus this commit's sidecar — together with the new rows.
+    Zero matches with nothing to insert commit nothing, unless a
+    ``txn`` mark must advance: then a data-less version lands. The
+    predicate cannot be bounded by key stats, so concurrent appends
+    conflict (Delta's ConcurrentAppend for DELETE/UPDATE)."""
+    op_name, count_key = op
+    schema = StructType.fromJson(json.loads(man["schema"]))
+    cmap = man.get("colmap")
+    rt = bool(man.get("row_tracking"))
+    entries = _manifest_files(path, man)
+    root = path.rstrip("/")
+    pred = F.expr(predicate) if isinstance(predicate, str) else predicate
+    new_v = _next_version(path, base_v)
+    stats_cols = man.get("columns", [])
+    mor = mode == "mor"
+    live = _scan_live(spark, root, schema, entries, with_pos=True,
+                      colmap=cmap, row_ids=rt and produce is not None)
+    matched = live.where(pred)
+    hits = matched.select(
+        F.col("__file").alias("file"), F.col("__pos").alias("row_index")
+    )
+    # positions land on disk BEFORE the manifest link (same crash
+    # contract as data files)
+    marked, counts = _mark_dead(spark, root, entries, hits, new_v, carry=mor)
+    n = sum(counts.values())
+    if not n and insert is None:
+        if txn is None:
+            return {count_key: 0, "version": base_v, "mode": mode}
+        # txn-marked zero match: commit a data-less version so the
+        # app's high-water mark advances (the replay contract)
+        new_v = _rebase_commit(
+            path, new_v, base_v, man,
+            op_fields=_op_fields(op_name, {count_key: 0, "mode": mode}),
+            stats_cols=stats_cols, txn=txn,
+            removed=set(), updated={}, added=[], appends_ok=True,
+        )
+        return {count_key: 0, "version": new_v, "mode": mode}
+
+    rewrite = not mor and bool(marked)
+    # row tracking: rewritten survivors and UPDATEd rows keep their
+    # ids through the materialized passenger column; inserted rows
+    # carry NULL there and fall back to the fresh base_row_id range
+    rid = rt and (produce is not None or rewrite)
+    parts = [produce(matched.drop("__file", "__pos"))] if produce else []
+    if insert is not None:
+        parts.append(
+            insert.withColumn(_RID_COL, F.lit(None).cast("long"))
+            if rid else insert
+        )
+    if rewrite:  # survivors first, as the rewritten files held them
+        parts.insert(0, _scan_live(spark, root, schema, list(marked.values()),
+                                   colmap=cmap, row_ids=rt))
+    new_files: list[dict] = []
+    if parts:
+        out = parts[0]
+        for p in parts[1:]:
+            out = out.unionByName(p)
+        if rid:
+            out = out.withColumnRenamed(_RID_COL, _RID_PHYS)
+        new_files = _write_commit_files(out, path, new_v, stats_cols,
+                                        schema, cmap, rid_passenger=rid)
+    metrics = {count_key: n, "mode": mode}
+    if insert is not None:
+        metrics["rows_written"] = sum(int(e["rows"]) for e in new_files)
+    new_v = _rebase_commit(
+        path, new_v, base_v, man,
+        op_fields=_op_fields(op_name, metrics),
+        stats_cols=stats_cols, txn=txn,
+        removed=set(marked) if rewrite else set(),
+        updated={} if rewrite else marked,
+        added=new_files,
+    )
+    return {"version": new_v, count_key: n, "mode": mode,
+            "files_added": len(new_files),
+            "files_rewritten": len(marked) if rewrite else 0,
+            "files_with_dv": len(marked) if mor else 0}
+
+
 def delete_where(
     spark: SparkSession,
     path: str,
@@ -2967,127 +3120,14 @@ def delete_where(
     pruning) — files whose stats exclude the predicate cost a footer,
     not a read.
     """
-    if mode not in {"mor", "cow"}:
-        raise ValueError(f"delete_where: unknown mode={mode!r}")
-    vs = snapshot_versions(path)
-    if not vs:
-        raise ValueError(f"delete_where: {path} is not a snapshot table")
-    base_v = vs[-1]
-    man = _read_manifest(path, base_v)
-    if txn is not None:
-        seen = man.get("txn", {}).get(str(txn[0]))
-        if seen is not None and int(txn[1]) <= int(seen):
-            return {"deleted_rows": 0, "version": base_v,
-                    "mode": mode, "skipped": True}
-    schema = StructType.fromJson(json.loads(man["schema"]))
-    entries = _manifest_files(path, man)
-    root = path.rstrip("/")
-    pred = F.expr(predicate) if isinstance(predicate, str) else predicate
-    new_v = _next_version(path, base_v)
-    stats_cols = man.get("columns", [])
-
-    live = _scan_live(spark, root, schema, entries, with_pos=True,
-                      colmap=man.get("colmap"))
-    hits = live.where(pred).select(
-        F.col("__file").alias("file"), F.col("__pos").alias("row_index")
-    )
-    # positions land on disk BEFORE the manifest link (same crash
-    # contract as data files); counts come from the written sidecar so
-    # the manifest can never disagree with it
-    dv_rel, totals, counts = _mint_dv(
-        spark, root, entries, hits, new_v, carry=(mode == "mor")
-    )
-    dv_dir = os.path.join(root, dv_rel)
-    deleted = sum(counts.values())
-    if not deleted and txn is None:
-        import shutil
-
-        shutil.rmtree(dv_dir, ignore_errors=True)
-        return {"deleted_rows": 0, "version": base_v, "mode": mode}
-    if not deleted:
-        # txn-marked zero-match delete: commit a data-less version so
-        # the app's high-water mark advances (the replay contract);
-        # entries carry unchanged
-        import shutil
-
-        shutil.rmtree(dv_dir, ignore_errors=True)
-        new_v = _rebase_commit(
-            path, new_v, base_v, man,
-            fields_fn=lambda: {
-                "schema": man["schema"],
-                **_constraint_fields(man),
-                **_generated_fields(man),
-                **_colmap_fields(man),
-            },
-            op_fields=_op_fields("DELETE", {"deleted_rows": 0,
-                                            "mode": mode}),
-            stats_cols=stats_cols,
-            txn=txn,
-            removed=set(), updated={}, added=[],
-            appends_ok=True,
-        )
-        return {"deleted_rows": 0, "version": new_v, "mode": mode}
-
-    updated_entries: dict[str, dict] = {}
-    removed_files: set[str] = set()
-    new_files: list[dict] = []
-    if mode == "mor":
-        new_entries = []
-        for e in entries:
-            if e["file"] in totals:
-                e = dict(e)
-                e["dv"] = [dv_rel]          # coalesced: one ref per file
-                e["dv_rows"] = totals[e["file"]]
-                updated_entries[e["file"]] = e
-            new_entries.append(e)
-        report = {"files_rewritten": 0, "files_with_dv": len(counts)}
-    else:
-        # cow: rewrite only files that contain matches, without their
-        # matching rows (and with their pre-existing DVs applied);
-        # clean files carry by reference. The hit sidecar doubles as
-        # the rewrite's anti-join side, then becomes garbage (no
-        # manifest ever references it under cow) for vacuum.
-        touched = [e for e in entries if e["file"] in counts]
-        carried = [e for e in entries if e["file"] not in counts]
-        rt_pass = bool(man.get("row_tracking"))
-        surv = _scan_live(spark, root, schema, touched, with_pos=True,
-                          colmap=man.get("colmap"), row_ids=rt_pass)
-        dvh = _read_dv(spark, root, [dv_rel])
-        surv = surv.join(
-            dvh,
-            (F.col("__file") == F.col("__dvf"))
-            & (F.col("__pos") == F.col("__dvp")),
-            "left_anti",
-        ).drop("__file", "__pos")
-        if rt_pass:
-            # survivors keep their ids through the rewrite (row
-            # tracking: DELETE must not renumber unrelated rows)
-            surv = surv.withColumnRenamed(_RID_COL, _RID_PHYS)
-        new_files = _write_commit_files(surv, path, new_v, stats_cols,
-                                         schema, man.get("colmap"),
-                                         rid_passenger=rt_pass)
-        removed_files = {e["file"] for e in touched}
-        report = {"files_rewritten": len(touched), "files_with_dv": 0}
-    new_v = _rebase_commit(
-        path, new_v, base_v, man,
-        fields_fn=lambda: {
-            "schema": man["schema"],
-            **_constraint_fields(man),
-            **_generated_fields(man),
-            **_colmap_fields(man),
-        },
-        op_fields=_op_fields("DELETE", {"deleted_rows": deleted,
-                                        "mode": mode}),
-        stats_cols=stats_cols,
-        txn=txn,
-        removed=removed_files,
-        updated=updated_entries,
-        added=new_files,
-        # an arbitrary predicate can't be bounded by key stats — any
-        # concurrently-appended file might contain matching rows, so
-        # appends conflict (Delta's ConcurrentAppend for DELETE)
-    )
-    return {"version": new_v, "deleted_rows": deleted, "mode": mode, **report}
+    base_v, man, seen = _dml_base("delete_where", path, mode, txn)
+    if seen is not None:
+        return {"deleted_rows": 0, "version": base_v,
+                "mode": mode, "skipped": True}
+    res = _rewrite_matched(spark, path, base_v, man, predicate, mode, txn,
+                           ("DELETE", "deleted_rows"))
+    res.pop("files_added", None)
+    return res
 
 
 def update_where(
@@ -3121,21 +3161,12 @@ def update_where(
     Zero matches → no new version. Time travel to the pre-update
     version reads the original rows.
     """
-    if mode not in {"mor", "cow"}:
-        raise ValueError(f"update_where: unknown mode={mode!r}")
-    vs = snapshot_versions(path)
-    if not vs:
-        raise ValueError(f"update_where: {path} is not a snapshot table")
-    base_v = vs[-1]
-    man = _read_manifest(path, base_v)
-    if txn is not None:
-        seen = man.get("txn", {}).get(str(txn[0]))
-        if seen is not None and int(txn[1]) <= int(seen):
-            return {"updated_rows": 0, "version": base_v,
-                    "mode": mode, "skipped": True}
+    base_v, man, seen = _dml_base("update_where", path, mode, txn)
+    if seen is not None:
+        return {"updated_rows": 0, "version": base_v,
+                "mode": mode, "skipped": True}
     schema = StructType.fromJson(json.loads(man["schema"]))
-    tcols = {f.name for f in schema.fields}
-    bad = [c for c in assignments if c not in tcols]
+    bad = [c for c in assignments if c not in schema.fieldNames()]
     if bad:
         raise ValueError(f"update_where: unknown columns {bad}")
     gen = man.get("generated", {})
@@ -3145,128 +3176,30 @@ def update_where(
             f"update_where: {gen_assigned} are GENERATED ALWAYS AS columns "
             "— update their inputs instead; the expressions recompute"
         )
-    entries = _manifest_files(path, man)
-    root = path.rstrip("/")
-    pred = F.expr(predicate) if isinstance(predicate, str) else predicate
-    new_v = _next_version(path, base_v)
-    stats_cols = man.get("columns", [])
 
-    rt_pass = bool(man.get("row_tracking"))
-    live = _scan_live(spark, root, schema, entries, with_pos=True,
-                      colmap=man.get("colmap"), row_ids=rt_pass)
-    matched = live.where(pred)
-    hits = matched.select(
-        F.col("__file").alias("file"), F.col("__pos").alias("row_index")
-    )
-    dv_rel, totals, counts = _mint_dv(
-        spark, root, entries, hits, new_v, carry=(mode == "mor")
-    )
-    dv_dir = os.path.join(root, dv_rel)
-    n_updated = sum(counts.values())
-    if not n_updated and txn is None:
-        import shutil
-
-        shutil.rmtree(dv_dir, ignore_errors=True)
-        return {"updated_rows": 0, "version": base_v, "mode": mode}
-    if not n_updated:
-        import shutil
-
-        shutil.rmtree(dv_dir, ignore_errors=True)
-        new_v = _rebase_commit(
-            path, new_v, base_v, man,
-            fields_fn=lambda: {
-                "schema": man["schema"],
-                **_constraint_fields(man),
-                **_generated_fields(man),
-                **_colmap_fields(man),
-            },
-            op_fields=_op_fields("UPDATE", {"updated_rows": 0,
-                                            "mode": mode}),
-            stats_cols=stats_cols,
-            txn=txn,
-            removed=set(), updated={}, added=[],
-            appends_ok=True,
+    def produce(matched: DataFrame) -> DataFrame:
+        upd = matched
+        for c, expr in assignments.items():
+            col = F.expr(expr) if isinstance(expr, str) else expr
+            upd = upd.withColumn(c, col.cast(schema[c].dataType))
+        # recompute GENERATED columns from the post-SET row (their
+        # inputs may just have changed — Delta recomputes on update)
+        for c, expr in gen.items():
+            upd = upd.withColumn(c, F.expr(expr).cast(schema[c].dataType))
+        # row tracking: an UPDATE preserves the row's id (the row keeps
+        # its identity; only its values change) — the id rides as a
+        # passenger through the SET projection
+        upd = upd.select(
+            *schema.fieldNames(),
+            *([_RID_COL] if man.get("row_tracking") else []),
         )
-        return {"updated_rows": 0, "version": new_v, "mode": mode}
+        # the rewritten rows are the only NEW data — CHECK them post-SET
+        _validate_constraints(upd, man.get("constraints", {}),
+                              "updated rows")
+        return upd
 
-    upd = matched.drop("__file", "__pos")
-    for c, expr in assignments.items():
-        col = F.expr(expr) if isinstance(expr, str) else expr
-        upd = upd.withColumn(c, col.cast(schema[c].dataType))
-    # recompute GENERATED columns from the post-SET row (their inputs
-    # may just have changed — Delta recomputes on update too)
-    for c, expr in gen.items():
-        upd = upd.withColumn(c, F.expr(expr).cast(schema[c].dataType))
-    # row tracking: an UPDATE preserves the row's id (the row keeps
-    # its identity; only its values change) — the id rides as a
-    # passenger through the SET projection
-    upd = upd.select(
-        *[f.name for f in schema.fields],
-        *([F.col(_RID_COL)] if rt_pass else []),
-    )
-    # the rewritten rows are the only NEW data — CHECK them post-SET
-    _validate_constraints(
-        upd, man.get("constraints", {}), "updated rows"
-    )
-
-    updated_entries: dict[str, dict] = {}
-    removed_files: set[str] = set()
-    if mode == "mor":
-        carried = []
-        for e in entries:
-            if e["file"] in totals:
-                e = dict(e)
-                e["dv"] = [dv_rel]          # coalesced: one ref per file
-                e["dv_rows"] = totals[e["file"]]
-                updated_entries[e["file"]] = e
-            carried.append(e)
-        wupd = (
-            upd.withColumnRenamed(_RID_COL, _RID_PHYS) if rt_pass else upd
-        )
-        new_files = _write_commit_files(wupd, path, new_v, stats_cols,
-                                         schema, man.get("colmap"),
-                                         rid_passenger=rt_pass)
-        report = {"files_rewritten": 0, "files_with_dv": len(counts)}
-    else:
-        touched = [e for e in entries if e["file"] in counts]
-        carried = [e for e in entries if e["file"] not in counts]
-        surv = _scan_live(spark, root, schema, touched, with_pos=True,
-                          colmap=man.get("colmap"), row_ids=rt_pass)
-        dvh = _read_dv(spark, root, [dv_rel])
-        surv = surv.join(
-            dvh,
-            (F.col("__file") == F.col("__dvf"))
-            & (F.col("__pos") == F.col("__dvp")),
-            "left_anti",
-        ).drop("__file", "__pos")
-        out = surv.unionByName(upd)
-        if rt_pass:
-            out = out.withColumnRenamed(_RID_COL, _RID_PHYS)
-        new_files = _write_commit_files(
-            out, path, new_v, stats_cols,
-            schema, man.get("colmap"), rid_passenger=rt_pass
-        )
-        removed_files = {e["file"] for e in touched}
-        report = {"files_rewritten": len(touched), "files_with_dv": 0}
-    new_v = _rebase_commit(
-        path, new_v, base_v, man,
-        fields_fn=lambda: {
-            "schema": man["schema"],
-            **_constraint_fields(man),
-            **_generated_fields(man),
-            **_colmap_fields(man),
-        },
-        op_fields=_op_fields("UPDATE", {"updated_rows": n_updated,
-                                        "mode": mode}),
-        stats_cols=stats_cols,
-        txn=txn,
-        removed=removed_files,
-        updated=updated_entries,
-        added=new_files,
-        # predicate-based like DELETE: concurrent appends conflict
-    )
-    return {"version": new_v, "updated_rows": n_updated, "mode": mode,
-            "files_added": len(new_files), **report}
+    return _rewrite_matched(spark, path, base_v, man, predicate, mode, txn,
+                            ("UPDATE", "updated_rows"), produce=produce)
 
 
 def replace_where(
@@ -3297,18 +3230,9 @@ def replace_where(
     :func:`_rebase_commit` (predicate-based: concurrent appends
     conflict, like DELETE).
     """
-    if mode not in {"mor", "cow"}:
-        raise ValueError(f"replace_where: unknown mode={mode!r}")
-    vs = snapshot_versions(path)
-    if not vs:
-        raise ValueError(f"replace_where: {path} is not a snapshot table")
-    base_v = vs[-1]
-    man = _read_manifest(path, base_v)
-    if txn is not None:
-        seen = man.get("txn", {}).get(str(txn[0]))
-        if seen is not None and int(txn[1]) <= int(seen):
-            return {"version": base_v, "skipped": True,
-                    "txn_high_water": int(seen)}
+    base_v, man, seen = _dml_base("replace_where", path, mode, txn)
+    if seen is not None:
+        return {"version": base_v, "skipped": True, "txn_high_water": seen}
     schema = StructType.fromJson(json.loads(man["schema"]))
     pred = F.expr(predicate) if isinstance(predicate, str) else predicate
     df = _apply_generated(df, man.get("generated", {}), "replace_where data")
@@ -3327,81 +3251,9 @@ def replace_where(
         )
     _validate_constraints(df, man.get("constraints", {}),
                           "replace_where data")
-    df = df.select(*[f.name for f in schema.fields])
-
-    entries = _manifest_files(path, man)
-    root = path.rstrip("/")
-    new_v = _next_version(path, base_v)
-    stats_cols = man.get("columns", [])
-    rt_pass = bool(man.get("row_tracking"))
-    cmap = man.get("colmap")
-
-    live = _scan_live(spark, root, schema, entries, with_pos=True,
-                      colmap=cmap)
-    hits = live.where(pred).select(
-        F.col("__file").alias("file"), F.col("__pos").alias("row_index")
-    )
-    dv_rel, totals, counts = _mint_dv(
-        spark, root, entries, hits, new_v, carry=(mode == "mor")
-    )
-    replaced = sum(counts.values())
-    updated_entries: dict[str, dict] = {}
-    removed_files: set[str] = set()
-    if not replaced:
-        import shutil
-
-        shutil.rmtree(os.path.join(root, dv_rel), ignore_errors=True)
-    elif mode == "mor":
-        for e in entries:
-            if e["file"] in totals:
-                ne = dict(e)
-                ne["dv"] = [dv_rel]
-                ne["dv_rows"] = totals[e["file"]]
-                updated_entries[e["file"]] = ne
-    else:
-        touched = [e for e in entries if e["file"] in counts]
-        removed_files = {e["file"] for e in touched}
-        surv = _scan_live(spark, root, schema, touched, with_pos=True,
-                          colmap=cmap, row_ids=rt_pass)
-        dvh = _read_dv(spark, root, [dv_rel])
-        surv = surv.join(
-            dvh,
-            (F.col("__file") == F.col("__dvf"))
-            & (F.col("__pos") == F.col("__dvp")),
-            "left_anti",
-        ).drop("__file", "__pos")
-        if rt_pass:
-            df = df.withColumn(_RID_COL, F.lit(None).cast("long"))
-            df = surv.unionByName(df).withColumnRenamed(_RID_COL, _RID_PHYS)
-        else:
-            df = surv.unionByName(df)
-    wdf = df
-    new_files = _write_commit_files(
-        wdf, path, new_v, stats_cols, schema, cmap,
-        rid_passenger=rt_pass and mode == "cow" and bool(replaced),
-    )
-    new_v = _rebase_commit(
-        path, new_v, base_v, man,
-        fields_fn=lambda: {
-            "schema": man["schema"],
-            **_constraint_fields(man),
-            **_generated_fields(man),
-            **_colmap_fields(man),
-        },
-        op_fields=_op_fields("REPLACE WHERE", {
-            "replaced_rows": replaced, "mode": mode,
-            "rows_written": sum(int(e["rows"]) for e in new_files),
-        }),
-        stats_cols=stats_cols,
-        txn=txn,
-        removed=removed_files,
-        updated=updated_entries,
-        added=new_files,
-    )
-    return {"version": new_v, "replaced_rows": replaced, "mode": mode,
-            "files_added": len(new_files),
-            "files_rewritten": len(removed_files),
-            "files_with_dv": len(updated_entries)}
+    return _rewrite_matched(spark, path, base_v, man, pred, mode, txn,
+                            ("REPLACE WHERE", "replaced_rows"),
+                            insert=df.select(*schema.fieldNames()))
 
 
 def restore(
@@ -3606,12 +3458,6 @@ def compact(
                                     rid_passenger=rt_pass)
     new_v = _rebase_commit(
         path, new_v, base_v, man,
-        fields_fn=lambda: {
-            "schema": man["schema"],
-            **_constraint_fields(man),
-            **_generated_fields(man),
-            **_colmap_fields(man),
-        },
         op_fields=_op_fields("OPTIMIZE", {
             "files_rewritten": len(rewrite),
             "files_added": len(new_files),

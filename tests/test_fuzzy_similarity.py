@@ -761,6 +761,32 @@ def test_append_to_minhash_index_equals_rebuild(spark, tmp_path):
     assert kept_inc == kept_full
 
 
+def test_append_to_minhash_index_keeps_caller_job_group(spark, tmp_path):
+    """The overlapped appends run on pool threads that inherit the
+    caller's job group: every job of the call is counted in it."""
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    idx = str(tmp_path / "mh")
+    fuzzy.build_minhash_index(docs.filter("doc_id % 4 = 0"), "doc_id",
+                              "text", idx)
+    sc = spark.sparkContext
+    sched = sc._jsc.sc().dagScheduler()
+    group = "minhash-append-job-group-test"
+    sc.setJobGroup(group, "append_to_minhash_index under a job group")
+    try:
+        jobs0 = sched.numTotalJobs()
+        fuzzy.append_to_minhash_index(
+            spark, docs.filter("doc_id % 4 = 2"), "doc_id", "text", idx
+        )
+        jobs = sched.numTotalJobs() - jobs0
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+    assert jobs > 0
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == jobs
+
+
 def test_compact_minhash_index_merges_increment_log(spark, tmp_path):
     """After appends the shingle-DF table holds one generation per
     batch; compaction folds it to one row per shingle with identical

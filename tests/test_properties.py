@@ -458,6 +458,7 @@ _SNAP_OPS = st.lists(
         st.tuples(st.just("merge"), st.integers(2, 5), st.integers(-9, 9)),
         st.tuples(st.just("update"), st.integers(2, 4), st.integers(1, 9)),
         st.tuples(st.just("delete"), st.integers(2, 6), st.just(0)),
+        st.tuples(st.just("replace"), st.integers(2, 6), st.integers(-9, 9)),
         st.tuples(st.just("rename"), st.just(0), st.just(0)),
     ),
     min_size=1,
@@ -469,11 +470,11 @@ _SNAP_OPS = st.lists(
 @settings(max_examples=8, deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 def test_snapshot_colmap_op_sequences_match_model(spark, tmp_path_factory, ops):
-    """Random interleavings of MERGE / UPDATE / DELETE / RENAME against
-    a trivially-correct dict model: column mapping must be invisible to
-    every data operation — same keys, same values, whatever the rename
-    history — because renames are manifest-only and physical names are
-    immutable."""
+    """Random interleavings of MERGE / UPDATE / DELETE / REPLACE WHERE /
+    RENAME against a trivially-correct dict model: column mapping must
+    be invisible to every data operation — same keys, same values,
+    whatever the rename history — because renames are manifest-only and
+    physical names are immutable."""
     import shutil
 
     from aws_medallion_etl_spark import snapshot as sn
@@ -513,6 +514,15 @@ def test_snapshot_colmap_op_sequences_match_model(spark, tmp_path_factory, ops):
             for k in list(model):
                 if k % m == 0:
                     del model[k]
+        elif op == "replace":  # re-land keys % m == 0 at d, plus m * 30
+            rows = [(k, d) for k in model if k % m == 0] + [(m * 30, d)]
+            sn.replace_where(
+                spark, path, f"k % {m} = 0",
+                spark.createDataFrame(rows, ["k", vname]),
+                mode="cow" if d % 2 else "mor",
+            )
+            model = {k: v for k, v in model.items() if k % m}
+            model.update(rows)
         else:  # rename the value column
             gen += 1
             new = f"v{gen}"
@@ -671,6 +681,7 @@ _RT_OPS = st.lists(
         st.tuples(st.just("merge"), st.integers(2, 5), st.integers(-9, 9)),
         st.tuples(st.just("update"), st.integers(2, 4), st.integers(1, 9)),
         st.tuples(st.just("delete"), st.integers(2, 6), st.integers(0, 1)),
+        st.tuples(st.just("replace"), st.integers(2, 6), st.integers(0, 1)),
         st.tuples(st.just("compact"), st.just(0), st.just(0)),
     ),
     min_size=1,
@@ -685,11 +696,12 @@ def test_row_tracking_id_invariants_under_op_sequences(
     spark, tmp_path_factory, ops
 ):
     """Random interleavings of MERGE / UPDATE (cow+mor) / DELETE
-    (cow+mor) / OPTIMIZE against a dict model tracking each logical
-    row's id: (a) a key that survives an op keeps the id it had; (b)
-    ids are unique at every step; (c) a re-inserted key gets a FRESH
-    id, never a recycled one (the durability contract downstream
-    incremental consumers rely on)."""
+    (cow+mor) / REPLACE WHERE (cow+mor) / OPTIMIZE against a dict
+    model tracking each logical row's id: (a) a key that survives an
+    op keeps the id it had; (b) ids are unique at every step; (c) a
+    re-inserted key — including a replacement row re-landing a
+    replaced key — gets a FRESH id, never a recycled one (the
+    durability contract downstream incremental consumers rely on)."""
     import shutil
 
     from aws_medallion_etl_spark import snapshot as sn
@@ -740,6 +752,19 @@ def test_row_tracking_id_invariants_under_op_sequences(
             )
             for k in doomed:
                 del model[k]
+        elif op == "replace":               # re-land keys % m == 0
+            landed = [k for k in model if k % m == 0] + [next_key * m]
+            sn.replace_where(
+                spark, path, f"k % {m} = 0",
+                spark.createDataFrame([(k, d) for k in landed], ["k", "v"]),
+                mode="mor" if d else "cow",
+            )
+            got = ids_now()
+            for k in landed:
+                assert got[k] not in ever_issued
+                model[k] = got[k]
+                ever_issued.add(got[k])
+            next_key += 1
         else:
             sn.compact(spark, path, small_file_rows=10**6)
         got = ids_now()

@@ -451,6 +451,23 @@ def test_merge_mor_equals_cow_and_no_resurrection(spark, tmp_path):
     assert 20 not in dict(_rows(spark, pm))
 
 
+def test_merge_mor_no_match_leaves_no_orphan_sidecar(spark, tmp_path):
+    """A mor MERGE whose source keys fall inside a file's key range but
+    match no row marks nothing dead: it must not leave an unreferenced
+    ``_deletes/`` sidecar behind, like the other DML verbs."""
+    path = str(tmp_path / "even")
+    even = spark.range(0, 100, 2).select(
+        F.col("id").alias("k"), (F.col("id") * 10).alias("v")
+    )
+    sn.snapshot_create(spark, even.coalesce(1), path, stats_cols=["k"])
+    src = spark.createDataFrame([(11, -1), (51, -2)], ["k", "v"])
+    rep = sn.merge_into(spark, path, src, on=["k"], write_mode="mor")
+    assert (rep["files_dv"], rep["dv_rows_added"]) == (0, 0)
+    assert not os.listdir(os.path.join(path, "_deletes"))
+    got = dict(_rows(spark, path))
+    assert len(got) == 52 and got[11] == -1 and got[51] == -2
+
+
 def test_compact_purges_dv_and_packs_small_files(spark, tmp_path):
     path, _ = _mk(spark, tmp_path)
     sn.delete_where(spark, path, "k % 3 = 0", mode="mor")
@@ -2715,6 +2732,177 @@ def test_replace_where_modes_and_guards(spark, tmp_path):
         assert sn.snapshot_read(spark, path).count() == 90
         # time travel: the pre-replace version still reads old rows
         assert sn.snapshot_read(spark, path, version=0).count() == 100
+
+
+def _dml_contract_steps(spark, mode):
+    """The fixed DML script of ``test_dml_verbs_contract``: (name, call)
+    pairs run in order against one 40-row, 4-file table."""
+    def rows(pairs):
+        return spark.createDataFrame(pairs, "k long, v long")
+
+    return [
+        ("delete", lambda p: sn.delete_where(
+            spark, p, "k % 5 = 0", mode=mode)),
+        ("update", lambda p: sn.update_where(
+            spark, p, "k % 5 = 1", {"v": "v + 1"}, mode=mode)),
+        ("update_zero", lambda p: sn.update_where(
+            spark, p, "k > 1000", {"v": "0"}, mode=mode)),
+        ("delete_txn_zero", lambda p: sn.delete_where(
+            spark, p, "k > 1000", mode=mode, txn=("app", 1))),
+        ("delete_txn_replay", lambda p: sn.delete_where(
+            spark, p, "k > 1000", mode=mode, txn=("app", 1))),
+        ("replace", lambda p: sn.replace_where(
+            spark, p, "k >= 30", rows([(30, -30), (31, -31), (32, -32)]),
+            mode=mode)),
+        ("replace_txn_zero", lambda p: sn.replace_where(
+            spark, p, "k >= 100", rows([(100, 1000)]), mode=mode,
+            txn=("app", 2))),
+        ("merge", lambda p: sn.merge_into(
+            spark, p, rows([(2, -2), (3, -3), (200, 2000)]), on=["k"],
+            write_mode=mode)),
+    ]
+
+
+# Expected per-step results of _dml_contract_steps, pinned from the
+# verbs as they stood before the shared row-level rewrite core: the
+# return dict, the Spark job count of the call, and the fresh
+# ``_row_id``s the step's new rows received (row tracking only).
+_DML_CONTRACT_RESULTS = {
+    "mor": [
+        {"version": 1, "deleted_rows": 8, "mode": "mor",
+         "files_rewritten": 0, "files_with_dv": 4},
+        {"version": 2, "updated_rows": 8, "mode": "mor", "files_added": 4,
+         "files_rewritten": 0, "files_with_dv": 4},
+        {"updated_rows": 0, "version": 2, "mode": "mor"},
+        {"deleted_rows": 0, "version": 3, "mode": "mor"},
+        {"deleted_rows": 0, "version": 3, "mode": "mor", "skipped": True},
+        {"version": 4, "replaced_rows": 8, "mode": "mor", "files_added": 4,
+         "files_rewritten": 0, "files_with_dv": 2},
+        {"version": 5, "replaced_rows": 0, "mode": "mor", "files_added": 2,
+         "files_rewritten": 0, "files_with_dv": 0},
+        {"version": 6, "files_rewritten": 0, "files_untouched": 14,
+         "files_added": 4, "files_dv": 1, "dv_rows_added": 2,
+         "columns_added": []},
+    ],
+    "cow": [
+        {"version": 1, "deleted_rows": 8, "mode": "cow",
+         "files_rewritten": 4, "files_with_dv": 0},
+        {"version": 2, "updated_rows": 8, "mode": "cow", "files_added": 8,
+         "files_rewritten": 4, "files_with_dv": 0},
+        {"updated_rows": 0, "version": 2, "mode": "cow"},
+        {"deleted_rows": 0, "version": 3, "mode": "cow"},
+        {"deleted_rows": 0, "version": 3, "mode": "cow", "skipped": True},
+        {"version": 4, "replaced_rows": 8, "mode": "cow", "files_added": 4,
+         "files_rewritten": 2, "files_with_dv": 0},
+        {"version": 5, "replaced_rows": 0, "mode": "cow", "files_added": 2,
+         "files_rewritten": 0, "files_with_dv": 0},
+        {"version": 6, "files_rewritten": 4, "files_untouched": 8,
+         "files_added": 4, "files_dv": 0, "dv_rows_added": 0,
+         "columns_added": []},
+    ],
+}
+# Spark jobs per step, keyed (mode, row_tracking). Under row tracking
+# the MERGE takes a second adaptive plan on some runs (its row-id
+# join's stages are submitted concurrently): one more job, and under
+# cow 3 files added instead of 4 — that step admits either plan.
+_DML_CONTRACT_JOBS = {
+    ("mor", False): [2, 8, 5, 5, 0, 9, 8, 17],
+    ("mor", True): [2, 10, 6, 5, 0, 9, 8, 23],
+    ("cow", False): [4, 4, 2, 2, 0, 6, 5, 10],
+    ("cow", True): [5, 7, 3, 2, 0, 7, 5, 15],
+}
+# fresh _row_ids minted per step under row tracking
+_DML_CONTRACT_FRESH = {
+    "mor": {"replace": {30: 48, 31: 49, 32: 50},
+            "replace_txn_zero": {100: 51}, "merge": {200: 54}},
+    "cow": {"replace": {30: 104, 31: 105, 32: 106},
+            "replace_txn_zero": {100: 107}, "merge": {200: 116}},
+}
+
+
+def _dml_contract_history(mode, merge_files_added):
+    """(version, op, metrics, n_files, live_rows) newest-last."""
+    mor = mode == "mor"
+    return [
+        (0, "CREATE", {"rows_written": 40}, 4, 40),
+        (1, "DELETE", {"deleted_rows": 8, "mode": mode}, 4, 32),
+        (2, "UPDATE", {"updated_rows": 8, "mode": mode}, 8, 32),
+        (3, "DELETE", {"deleted_rows": 0, "mode": mode}, 8, 32),
+        (4, "REPLACE WHERE",
+         {"replaced_rows": 8, "mode": mode, "rows_written": 3},
+         12 if mor else 10, 27),
+        (5, "REPLACE WHERE",
+         {"replaced_rows": 0, "mode": mode, "rows_written": 1},
+         14 if mor else 12, 28),
+        (6, "MERGE", {"files_added": merge_files_added,
+                      "files_dv": 1 if mor else 0,
+                      "dv_rows_added": 2 if mor else 0},
+         (14 if mor else 8) + merge_files_added, 29),
+    ]
+
+
+@pytest.mark.parametrize("mode", ["mor", "cow"])
+@pytest.mark.parametrize("row_tracking", [False, True])
+def test_dml_verbs_contract(spark, tmp_path, mode, row_tracking):
+    """DELETE / UPDATE / REPLACE WHERE / MERGE keep their exact
+    observable contract: return dicts, Spark jobs per call, history op
+    names and metrics, and live ``(k, v, _row_id)`` after every step —
+    zero-match, txn zero-match and txn-replay steps included."""
+    path = str(tmp_path / "contract")
+    base = spark.range(40).select(
+        F.col("id").alias("k"), (F.col("id") * 10).alias("v")
+    )
+    sn.snapshot_create(
+        spark, base.repartitionByRange(4, "k"), path, ["k"],
+        row_tracking=row_tracking,
+    )
+
+    def live():
+        if not row_tracking:
+            return {r["k"]: (r["v"], None)
+                    for r in sn.snapshot_read(spark, path).collect()}
+        return {r["k"]: (r["v"], r["_row_id"]) for r in
+                sn.snapshot_read(spark, path, row_ids=True).collect()}
+
+    model = live()
+    want_results = [dict(r) for r in _DML_CONTRACT_RESULTS[mode]]
+    if mode == "mor" and row_tracking:
+        # the row-id passenger join lands the MERGE's rows in 2 files
+        want_results[-1]["files_added"] = 2
+    fresh_ids = _DML_CONTRACT_FRESH[mode] if row_tracking else {}
+    jsc = spark.sparkContext._jsc.sc().dagScheduler()
+    for (name, call), want_res, want_jobs in zip(
+        _dml_contract_steps(spark, mode), want_results,
+        _DML_CONTRACT_JOBS[(mode, row_tracking)], strict=True,
+    ):
+        jobs0 = jsc.numTotalJobs()
+        res = call(path)
+        jobs = jsc.numTotalJobs() - jobs0
+        if name == "merge" and row_tracking and jobs == want_jobs + 1:
+            jobs = want_jobs
+            if mode == "cow":
+                want_res = dict(want_res, files_added=3)
+        assert (res, jobs) == (want_res, want_jobs), name
+        # the model: step semantics over keys, survivors keep their ids
+        if name == "delete":
+            model = {k: x for k, x in model.items() if k % 5}
+        elif name == "update":
+            model = {k: (v + 1 if k % 5 == 1 else v, rid)
+                     for k, (v, rid) in model.items()}
+        elif name == "replace":
+            model = {k: x for k, x in model.items() if k < 30}
+            model.update({k: (-k, None) for k in (30, 31, 32)})
+        elif name == "replace_txn_zero":
+            model[100] = (1000, None)
+        elif name == "merge":
+            model.update({2: (-2, model[2][1]), 3: (-3, model[3][1]),
+                          200: (2000, None)})
+        for k, rid in fresh_ids.get(name, {}).items():
+            model[k] = (model[k][0], rid)
+        assert live() == model, name
+    hist = [(h["version"], h["operation"], h["metrics"], h["n_files"],
+             h["live_rows"]) for h in reversed(sn.snapshot_history(path))]
+    assert hist == _dml_contract_history(mode, res["files_added"])
 
 
 # ---------------------------------------------------------------------------
