@@ -14,9 +14,17 @@ already ships:
   idempotent-writer contract the streaming sinks use, so a replayed
   refresh no-ops and a crashed one re-runs from the last committed
   cursor;
-* the MV update itself is a :func:`snapshot.merge_into` upsert of the
-  AFFECTED groups only, followed by a MOR delete of groups whose
-  row count reached zero.
+* the MV update itself is ONE conditional :func:`snapshot.merge_into`
+  of the AFFECTED groups only; groups whose row count reached zero
+  delete inside the same commit.
+
+Both refreshers share one maintenance core. Each projects its change
+rows into a SIGNED-ROWS frame (``__sign`` = +1 for a row entering the
+view, -1 for a row leaving it, plus its measures);
+:meth:`_Rollup.delta` aggregates that frame per group and
+:func:`_apply_delta` applies the keyed delta to the MV. The two
+refreshers differ only in how they build their signed rows and how
+they recompute at-risk groups.
 
 Scale shape: a refresh reads commit CHURN (the CDF manifest diff
 excludes untouched files before any data is read), aggregates it with
@@ -58,8 +66,9 @@ reading MVs through :func:`read_rollup`.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 import functools
+from dataclasses import dataclass
 
 from pyspark.sql import functions as F
 
@@ -213,22 +222,17 @@ def _maybe_broadcast(df: DataFrame, est_bytes: float,
     return F.broadcast(df) if est_bytes <= threshold else df
 
 
-def _avg_cols(avgs: dict[str, str]) -> list:
-    """The materialized avg columns: one exact division of the two
-    integer companions (NULL when no non-null values — SQL AVG)."""
-    return [
+def _with_avg_cols(df: DataFrame, avgs: dict[str, str]) -> DataFrame:
+    """Append the materialized avg columns: one exact division of the
+    two integer companions (NULL when no non-null values — SQL AVG).
+    One definition, so the avg contract can't diverge between paths."""
+    return df.select("*", *[
         F.when(
             F.col(f"__cnt_{out}") > 0,
             F.col(f"__sum_{out}").cast("double") / F.col(f"__cnt_{out}"),
         ).alias(out)
         for out in avgs
-    ]
-
-
-def _with_avg_cols(df: DataFrame, avgs: dict[str, str]) -> DataFrame:
-    """Append the materialized avg projections (shared by both
-    refreshers — one definition so the avg contract can't diverge)."""
-    return df.select("*", *_avg_cols(avgs)) if avgs else df
+    ]) if avgs else df
 
 
 def _null_any(group_cols):
@@ -265,32 +269,6 @@ def _count_groups_checked(merged: DataFrame, group_cols, fn: str) -> int:
     return row["__n"]
 
 
-def _observe_null_groups(df: DataFrame, group_cols):
-    """Attach the create-path NULL-group check as an Observation so it
-    rides the create write's own action (round 15) instead of costing
-    a separate count + checkpoint. Returns ``(df, observation)``;
-    check with :func:`_raise_if_null_groups` AFTER the write."""
-    from pyspark.sql import Observation
-
-    obs = Observation()
-    return df.observe(
-        obs, F.sum(_null_any(group_cols).cast("long")).alias("__nulls")
-    ), obs
-
-
-def _raise_if_null_groups(obs, mv_path: str, group_cols, fn: str) -> None:
-    """Create-path epilogue for :func:`_observe_null_groups`: a NULL
-    group key in the just-written aggregate removes the table again
-    (create is single-writer; nothing else can have seen it) and
-    raises the same contract error the pre-write check did."""
-    n_nulls = obs.get["__nulls"]
-    if n_nulls:
-        import shutil
-
-        shutil.rmtree(mv_path, ignore_errors=True)
-        raise _null_group_error(fn, n_nulls, group_cols)
-
-
 def _check_out_names(fn: str, out_names: list, group_cols) -> None:
     """Alias hygiene shared by both refreshers: every output alias
     lands in ONE flat MV schema (avgs additionally mint __sum_/__cnt_
@@ -306,6 +284,305 @@ def _check_out_names(fn: str, out_names: list, group_cols) -> None:
             f"n_rows or a group column; duplicates={sorted(dupes)} "
             f"reserved={sorted(reserved)}"
         )
+
+
+def _sign() -> Column:
+    """+1 for a CDF row entering the table (insert / update
+    postimage), -1 for one leaving it (delete / update preimage)."""
+    return F.when(
+        F.col("_change_type").isin("insert", "update_postimage"), F.lit(1)
+    ).otherwise(F.lit(-1))
+
+
+@dataclass(frozen=True)
+class _Rollup:
+    """A rollup MV's aggregate spec — each map takes output alias to a
+    SQL expression over the base (or joined) row — and the frames the
+    shared maintenance core builds from it."""
+
+    group_cols: list
+    sums: dict
+    avgs: dict
+    mins: dict
+    maxs: dict
+
+    @classmethod
+    def of(cls, fn, group_cols, sums, avgs, mins, maxs) -> "_Rollup":
+        """Normalize the optional maps and check the output aliases."""
+        avgs, mins, maxs = (dict(m or {}) for m in (avgs, mins, maxs))
+        _check_out_names(
+            fn,
+            [*sums, *avgs, *mins, *maxs]
+            + [f"__sum_{o}" for o in avgs] + [f"__cnt_{o}" for o in avgs],
+            group_cols,
+        )
+        return cls(list(group_cols), dict(sums), avgs, mins, maxs)
+
+    @property
+    def sub_cols(self) -> list:
+        """(alias, expr) of the SUBTRACTABLE family: sums, plus each
+        avg's exact integer ``__sum_`` companion."""
+        return [*self.sums.items(),
+                *((f"__sum_{o}", src) for o, src in self.avgs.items())]
+
+    def full(self, rows: DataFrame) -> DataFrame:
+        """The from-scratch aggregate of ``rows`` — both create paths
+        and the join's dim-churn full recompute."""
+        return _with_avg_cols(rows.groupBy(*self.group_cols).agg(
+            F.count(F.lit(1)).cast("long").alias("n_rows"),
+            *[F.sum(F.expr(src)).cast("long").alias(o)
+              for o, src in self.sub_cols],
+            *[F.count(F.expr(src)).cast("long").alias(f"__cnt_{o}")
+              for o, src in self.avgs.items()],
+            *[F.min(F.expr(src)).cast("long").alias(o)
+              for o, src in self.mins.items()],
+            *[F.max(F.expr(src)).cast("long").alias(o)
+              for o, src in self.maxs.items()],
+        ), self.avgs)
+
+    def signed(self, rows: DataFrame, sign: Column) -> DataFrame:
+        """Project change rows into the signed-rows frame: group
+        columns, ``__sign``, each subtractable measure (``__m_``),
+        each avg's non-null indicator (``__p_``) and each min/max
+        measure as a raw value (``__x_``) so the delta can split it
+        into insert-side folds and delete-side at-risk probes."""
+        return rows.select(
+            *self.group_cols,
+            sign.alias("__sign"),
+            *[F.expr(src).alias(f"__m_{o}") for o, src in self.sub_cols],
+            *[F.expr(src).isNotNull().cast("long").alias(f"__p_{o}")
+              for o, src in self.avgs.items()],
+            *[F.expr(src).cast("long").alias(f"__x_{o}")
+              for o, src in {**self.mins, **self.maxs}.items()],
+        )
+
+    def delta(self, signed: DataFrame) -> DataFrame:
+        """The keyed signed group delta, ONE shuffle: signed sums of
+        rows / measures / avg counts, and per min/max the positive
+        rows' extreme (folds in monotonically) and the negative rows'
+        extreme (decides which groups a removal could have changed)."""
+        sign, pos = F.col("__sign"), F.col("__sign") > 0
+        aggs = [
+            F.sum(sign).cast("long").alias("__d_rows"),
+            *[F.sum(sign * F.col(f"__m_{o}")).cast("long")
+              .alias(f"__d_{o}") for o, _ in self.sub_cols],
+            *[F.sum(sign * F.col(f"__p_{o}")).cast("long")
+              .alias(f"__d_cnt_{o}") for o in self.avgs],
+        ]
+        for agg, outs in ((F.min, self.mins), (F.max, self.maxs)):
+            for out in outs:
+                aggs.append(agg(F.when(pos, F.col(f"__x_{out}")))
+                            .cast("long").alias(f"__ins_{out}"))
+                aggs.append(agg(F.when(~pos, F.col(f"__x_{out}")))
+                            .cast("long").alias(f"__del_{out}"))
+        if self.mins or self.maxs:
+            aggs.append(F.sum((~pos).cast("long")).cast("long")
+                        .alias("__n_del"))
+        return signed.groupBy(*self.group_cols).agg(*aggs)
+
+    def at_risk(self) -> Column:
+        """The AT-RISK groups of a delta joined onto the MV. A negative
+        row can only move an extreme if it TIES the stored one (values
+        strictly inside the envelope are spectators; NULL-valued
+        negatives never qualify — min/max skip NULLs), or the group has
+        negatives but no MV row yet (its insert-side fold would
+        overcount). Plus the NULL-extreme term: a NULL stored extreme
+        makes the tie comparison NULL, yet a NON-NULL negative against
+        it can only be half of a spurious cancel-pair (a genuine delete
+        of v implies v was in the group, so the extreme was not NULL),
+        whose positive twin would fold a value that is not in the
+        group. Only the join's signed union produces such pairs — a
+        single-table CDF window is netted per row, so the term never
+        fires there."""
+        risk = F.lit(False)
+        for out in [*self.mins, *self.maxs]:
+            d, stored = F.col(f"__del_{out}"), F.col(out)
+            risk = risk | ((d <= stored) if out in self.mins
+                           else (d >= stored)) | (
+                d.isNotNull() & stored.isNull())
+        return (F.col("__n_del") > 0) & (risk | F.col("n_rows").isNull())
+
+    def recomputed(self, rows: DataFrame, risk_keys: DataFrame) -> DataFrame:
+        """The at-risk groups' exact extremes (``__rc_*``, ``__rc``
+        marks a recomputed group) from their current base rows."""
+        return rows.join(risk_keys, self.group_cols, "semi") \
+            .groupBy(*self.group_cols).agg(
+                *[F.min(F.expr(src)).cast("long").alias(f"__rc_{o}")
+                  for o, src in self.mins.items()],
+                *[F.max(F.expr(src)).cast("long").alias(f"__rc_{o}")
+                  for o, src in self.maxs.items()],
+                F.lit(1).alias("__rc"),
+            )
+
+    def merged(self, joined: DataFrame, recomputed: bool) -> DataFrame:
+        """The MV rows after the delta: stored + delta per subtractable
+        column, least/greatest folds for min/max (a recomputed group
+        takes its ``__rc_*`` value instead), avgs re-divided."""
+        out_cols = [
+            *self.group_cols,
+            (F.coalesce("n_rows", F.lit(0)) + F.col("__d_rows"))
+            .cast("long").alias("n_rows"),
+            *[
+                # both sides coalesced: a change batch whose rows all
+                # carry NULL in a measure sums to a NULL delta, which
+                # must not wipe the group's accumulated value
+                (F.coalesce(o, F.lit(0))
+                 + F.coalesce(F.col(f"__d_{o}"), F.lit(0)))
+                .cast("long").alias(o)
+                for o, _ in self.sub_cols
+            ],
+            *[
+                (F.coalesce(f"__cnt_{o}", F.lit(0))
+                 + F.coalesce(F.col(f"__d_cnt_{o}"), F.lit(0)))
+                .cast("long").alias(f"__cnt_{o}")
+                for o in self.avgs
+            ],
+        ]
+        for fold, outs in ((F.least, self.mins), (F.greatest, self.maxs)):
+            for out in outs:
+                # least/greatest skip NULLs in both engines: a new group
+                # takes the insert extreme, an untouched-extreme group
+                # keeps its own
+                v = fold(F.col(out), F.col(f"__ins_{out}"))
+                if recomputed:
+                    v = F.when(F.col("__rc").isNotNull(),
+                               F.col(f"__rc_{out}")).otherwise(v)
+                out_cols.append(v.cast("long").alias(out))
+        return _with_avg_cols(joined.select(*out_cols), self.avgs)
+
+
+def _create(spark: SparkSession, full: DataFrame, mv_path: str,
+            group_cols, cursor: tuple, fn: str) -> int:
+    """Create the MV from its full aggregate in ONE commit; returns
+    its version. The commit carries the refresher's ``(app_id,
+    cursor)`` mark and the :data:`_CONTRACT_APP` marker: a round-13+
+    refresher is single-commit-atomic from birth, so the per-refresh
+    phantom probe and read_rollup's ``n_rows`` filter are answered
+    from the txn map with zero Spark jobs, exactly like an upgraded
+    legacy table. ``n_rows`` rides the stats columns so the
+    probe can be answered from the manifest alone otherwise.
+
+    The NON-NULL group-key contract holds at create time too: an MV
+    created with a NULL-group row would refuse every later refresh
+    touching the group. The check rides the create write as an
+    Observation (no separate count action); a NULL-group aggregate
+    removes the just-written table (create is single-writer, nothing
+    else can have seen it) and raises the refreshers' error."""
+    from pyspark.sql import Observation
+
+    obs = Observation()
+    full = full.observe(
+        obs, F.sum(_null_any(group_cols).cast("long")).alias("__nulls"))
+    v = snap.snapshot_create(
+        spark, full, mv_path, stats_cols=[*group_cols, "n_rows"],
+        txn=[cursor, (_CONTRACT_APP, 1)],
+    )
+    n_nulls = obs.get["__nulls"]
+    if n_nulls:
+        import shutil
+
+        shutil.rmtree(mv_path, ignore_errors=True)
+        raise _null_group_error(f"{fn} (create)", n_nulls, group_cols)
+    return v
+
+
+def _open_cursor(spark: SparkSession, mv_path: str, app_id: str,
+                 fn: str) -> int:
+    """The MV's stamped ``app_id`` txn mark (the refresh cursor),
+    after the phantom self-heal. The heal runs BEFORE the caller's
+    cursor check: a crash between a pre-round-13 refresher's
+    cursor-stamping merge and its zero-group delete would otherwise
+    leave ``n_rows = 0`` phantoms forever (the replay early-returns).
+    Two-tier probe: the manifest's ``n_rows`` stats prove the common
+    no-phantom case with ZERO Spark jobs; only a possible phantom pays
+    the limit(1) scan, and only a real one pays ``delete_where``."""
+    mark = snap.last_txn_version(mv_path, app_id)
+    if mark is None:
+        raise ValueError(
+            f"{fn}: {mv_path} exists but carries no "
+            f"{app_id!r} cursor — it was not created by this refresher"
+        )
+    if _zero_groups_possible(mv_path) and snap.snapshot_read(
+            spark, mv_path).where("n_rows = 0").limit(1).count():
+        snap.delete_where(spark, mv_path, "n_rows = 0", mode="mor")
+    return mark
+
+
+def _merge_groups(spark: SparkSession, mv_path: str, merged: DataFrame,
+                  group_cols, txn: tuple, n_changed: int) -> tuple:
+    """ONE atomic commit (round 13, conditional MERGE clauses): live
+    groups upsert, groups the delta emptied DELETE in the same commit,
+    and a group that both appeared and emptied inside the window never
+    inserts — no reader-visible phantom window, no second commit. The
+    new cursor rides the commit as its txn mark. Returns
+    ``(mv_version, applied)``; ``applied`` is False when a racing
+    refresher landed this (or a later) window first, so the caller
+    reports the no-op, not the loser's workload."""
+    res = snap.merge_into(
+        spark, mv_path, merged, on=list(group_cols), txn=txn,
+        matched_delete_where="n_rows = 0",
+        insert_where="n_rows > 0",
+        small_source_hint=n_changed,
+    )
+    if res.get("skipped"):
+        return res["version"], False
+    return snap.current_version(mv_path), True
+
+
+def _apply_delta(spark: SparkSession, mv_path: str, r: _Rollup,
+                 delta: DataFrame, at_risk_rows, fn: str,
+                 txn: tuple) -> tuple:
+    """Apply a keyed signed group delta (:meth:`_Rollup.delta`) to the
+    MV in one atomic commit; returns ``(mv_version, groups_changed,
+    groups_recomputed)`` (zeros when the merge was skipped).
+
+    The delta left-joins the MV (group-cardinality-sized). With
+    min/max columns, ONE fused action answers the at-risk count, the
+    recompute's prune envelope (risk-conditional ``__lo_``/``__hi_``
+    per group column), AND the merged delta's group count + NON-NULL
+    group-key check: the merged frame is a 1:1
+    projection of the joined one (the recompute left-join is
+    per-group unique), so its count and NULL-group content are
+    exactly this frame's. At-risk groups go to the refresher's
+    ``at_risk_rows(probe_row, risk_keys)``, which returns the base
+    rows to recompute them from — pruned by the envelope, at the
+    captured version(s); the core semi-joins them to the exact keys.
+    Without min/max columns the count + NULL-group check is the only
+    pre-merge action."""
+    g = r.group_cols
+    joined = delta.join(snap.snapshot_read(spark, mv_path), g, "left")
+    n_changed, n_recompute, recomputed = None, 0, False
+    if r.mins or r.maxs:
+        # the probe AND the merged projection both consume this frame;
+        # without a checkpoint each action re-reads the whole CDF
+        # window lineage (measured: ~3 s per refresh at sf0.1)
+        joined = joined.localCheckpoint(eager=False)
+        risk = r.at_risk()
+        probe_row = joined.agg(
+            F.count(F.lit(1)).alias("__n_groups"),
+            F.sum(_null_any(g).cast("long")).alias("__nulls"),
+            F.count(F.when(risk, F.lit(1))).alias("__n"),
+            *[f for c in g for f in (
+                F.min(F.when(risk, F.col(c))).alias(f"__lo_{c}"),
+                F.max(F.when(risk, F.col(c))).alias(f"__hi_{c}"),
+            )]
+        ).first()
+        if probe_row["__nulls"]:
+            raise _null_group_error(fn, probe_row["__nulls"], g)
+        n_changed, n_recompute = probe_row["__n_groups"], probe_row["__n"]
+        if n_recompute:
+            risk_keys = joined.where(risk).select(*g) \
+                .localCheckpoint(eager=False)
+            rc = r.recomputed(at_risk_rows(probe_row, risk_keys), risk_keys)
+            joined = joined.join(rc, g, "left")
+            recomputed = True
+    # the merge's probe/validate/write branches each consume this
+    # frame — materialize the (group-cardinality-sized) delta once
+    merged = r.merged(joined, recomputed).localCheckpoint(eager=False)
+    if n_changed is None:
+        n_changed = _count_groups_checked(merged, g, fn)
+    v, applied = _merge_groups(spark, mv_path, merged, g, txn, n_changed)
+    return (v, n_changed, n_recompute) if applied else (v, 0, 0)
 
 
 @_reclaiming
@@ -358,277 +635,89 @@ def refresh_rollup(
     Coalesce nullable grouping columns to a sentinel first. Consumers
     read through :func:`read_rollup` (``n_rows > 0``).
     """
-    mins = dict(mins or {})
-    maxs = dict(maxs or {})
-    avgs = dict(avgs or {})
-    _check_out_names(
-        "refresh_rollup",
-        [*sums] + [*mins] + [*maxs] + [*avgs]
-        + [f"__sum_{o}" for o in avgs] + [f"__cnt_{o}" for o in avgs],
-        group_cols,
-    )
+    r = _Rollup.of("refresh_rollup", group_cols, sums, avgs, mins, maxs)
     base_v = snap.current_version(base_path)
     if base_v is None:
         raise ValueError(f"refresh_rollup: {base_path} is not a snapshot table")
 
-    # (output alias, agg builder over a sign/expr) for the subtractable
-    # family: sums, plus each avg's exact integer companions
-    sub_cols = list(sums.items()) + [
-        (f"__sum_{out}", src) for out, src in avgs.items()
-    ]
-
-    def _full_aggs():
-        out = [F.count(F.lit(1)).cast("long").alias("n_rows")]
-        out += [F.sum(F.expr(src)).cast("long").alias(o) for o, src in sub_cols]
-        out += [
-            F.count(F.expr(src)).cast("long").alias(f"__cnt_{o}")
-            for o, src in avgs.items()
-        ]
-        out += [F.min(F.expr(src)).cast("long").alias(o) for o, src in mins.items()]
-        out += [F.max(F.expr(src)).cast("long").alias(o) for o, src in maxs.items()]
-        return out
+    def result(mv_version, changed=0, recomputed=0, created=False):
+        return {"mv_version": mv_version, "base_version": base_v,
+                "groups_changed": changed, "groups_recomputed": recomputed,
+                "created": created}
 
     if snap.current_version(mv_path) is None:
-        full = (
-            # pinned at the CAPTURED version: a commit landing between
-            # current_version() and this read would otherwise be baked
-            # into the initial aggregate AND replayed by the first
-            # incremental refresh (double count)
-            snap.snapshot_read(spark, base_path, version=base_v)
-            .groupBy(*group_cols)
-            .agg(*_full_aggs())
-        )
-        full = _with_avg_cols(full, avgs)
-        # enforce the NON-NULL group-key contract at CREATE time too
-        # (round 14): the create used to materialize NULL-group rows
-        # silently and every LATER refresh touching the group refused —
-        # an MV born unrefreshable, fixable only by rebuild. Round 15:
-        # the check rides the CREATE WRITE itself as an Observation
-        # (guide §1.2 — the separate count action and its
-        # localCheckpoint staging are gone); a NULL-group aggregate
-        # still raises the same error, with the just-created table
-        # removed so the outcome is identical to failing before the
-        # write (no table left behind, single-writer create path).
-        full, obs = _observe_null_groups(full, group_cols)
-        v = snap.snapshot_create(
-            # n_rows rides the stats columns so the phantom-group
-            # probe can be answered from the manifest alone; the
-            # contract marker rides the SAME create commit (round 14)
-            # — a round-13+ refresher is single-commit-atomic from
-            # birth, so the per-refresh phantom probe and read_rollup's
-            # n_rows filter are answered from the txn map with zero
-            # Spark jobs, exactly like an upgraded legacy table
-            spark, full, mv_path, stats_cols=[*group_cols, "n_rows"],
-            txn=[(app_id, base_v), (_CONTRACT_APP, 1)],
-        )
-        _raise_if_null_groups(obs, mv_path, group_cols,
-                              "refresh_rollup (create)")
-        return {"mv_version": v, "base_version": base_v,
-                "groups_changed": -1, "groups_recomputed": 0,
-                "created": True}
-
-    cursor = snap.last_txn_version(mv_path, app_id)
-    if cursor is None:
-        raise ValueError(
-            f"refresh_rollup: {mv_path} exists but carries no "
-            f"{app_id!r} cursor — it was not created by this refresher"
-        )
-    # self-heal BEFORE the cursor check: a crash between the cursor-
-    # stamping merge and the zero-group delete would otherwise leave
-    # n_rows=0 phantoms forever (the replay early-returns). Two-tier
-    # probe: the manifest's n_rows stats prove the common no-phantom
-    # case with ZERO Spark jobs; only a possible phantom pays the
-    # limit(1) scan, and only a real one pays delete_where.
-    if _zero_groups_possible(mv_path) and snap.snapshot_read(
-            spark, mv_path).where("n_rows = 0").limit(1).count():
-        snap.delete_where(spark, mv_path, "n_rows = 0", mode="mor")
+        # pinned at the CAPTURED version: a commit landing between
+        # current_version() and this read would otherwise be baked
+        # into the initial aggregate AND replayed by the first
+        # incremental refresh (double count)
+        full = r.full(snap.snapshot_read(spark, base_path, version=base_v))
+        return result(_create(spark, full, mv_path, r.group_cols,
+                              (app_id, base_v), "refresh_rollup"),
+                      -1, created=True)
+    cursor = _open_cursor(spark, mv_path, app_id, "refresh_rollup")
     if cursor >= base_v:
-        return {"mv_version": snap.current_version(mv_path),
-                "base_version": base_v, "groups_changed": 0,
-                "groups_recomputed": 0, "created": False}
+        return result(snap.current_version(mv_path))
 
     chg = snap.snapshot_changes(
         spark, base_path, v_from=cursor, v_to=base_v, row_ids=True
     )
-    is_add = F.col("_change_type").isin("insert", "update_postimage")
-    sign = F.when(is_add, F.lit(1)).otherwise(F.lit(-1))
-    delta_aggs = [
-        F.sum(sign).cast("long").alias("__d_rows"),
+
+    def at_risk_rows(probe_row, risk_keys):
+        # stats-pruned base scan: bound each group column by the
+        # at-risk key envelope and drop every file the manifest proves
+        # disjoint (the core then semi-joins exact)
+        return snap.snapshot_read(spark, base_path, version=base_v, prune={
+            c: (probe_row[f"__lo_{c}"], probe_row[f"__hi_{c}"])
+            for c in r.group_cols
+        })
+
+    return result(*_apply_delta(
+        spark, mv_path, r, r.delta(r.signed(chg, _sign())), at_risk_rows,
+        "refresh_rollup", (app_id, base_v),
+    ))
+
+
+def _recomposition(spark: SparkSession, fn: str, mv_path: str,
+                   group_cols, version, sums, mins, maxs, avgs,
+                   extra_out=(), hint: str = "") -> tuple:
+    """The MV read and the aggregate list :func:`coarsen_rollup` and
+    :func:`cube_rollup` recompose a coarser grouping with: SUM of
+    ``n_rows`` / sums, MIN / MAX of extremes, and each avg exactly from
+    its integer companions. Returns ``(mv, aggs)``."""
+    sums, mins, maxs, avgs = (list(x or []) for x in (sums, mins, maxs, avgs))
+    # same output-alias disjointness the refreshers enforce: a column
+    # named in two lists would mint two output columns with one name
+    # (ambiguous downstream), and n_rows/group columns are produced
+    # by the coarsening itself
+    _check_out_names(
+        fn, sums + mins + maxs + avgs + list(extra_out), group_cols)
+    mv = read_rollup(spark, mv_path, version=version)
+    need = (
+        set(group_cols) | set(sums) | set(mins) | set(maxs)
+        | {f"__sum_{c}" for c in avgs} | {f"__cnt_{c}" for c in avgs}
+    )
+    missing = sorted(need - set(mv.columns))
+    if missing:
+        raise ValueError(
+            f"{fn}: {mv_path} has no columns {missing} — "
+            "group_cols must be a subset of the MV's group columns and "
+            "each aggregate list must name stored MV measure columns "
+            f"(avgs need their __sum_/__cnt_ companions{hint})"
+        )
+    return mv, [
+        F.sum("n_rows").cast("long").alias("n_rows"),
+        *[F.sum(c).cast("long").alias(c) for c in sums],
+        *[F.min(c).cast("long").alias(c) for c in mins],
+        *[F.max(c).cast("long").alias(c) for c in maxs],
         *[
-            F.sum(sign * F.expr(src)).cast("long").alias(f"__d_{out}")
-            for out, src in sub_cols
-        ],
-        *[
-            F.sum(
-                sign * F.expr(src).isNotNull().cast("long")
-            ).cast("long").alias(f"__d_cnt_{out}")
-            for out, src in avgs.items()
+            F.when(
+                F.sum(f"__cnt_{c}") > 0,
+                F.sum(f"__sum_{c}").cast("long").cast("double")
+                / F.sum(f"__cnt_{c}").cast("long"),
+            ).alias(c)
+            for c in avgs
         ],
     ]
-    # insert-side extremes fold in monotonically; delete-side extremes
-    # decide which groups a removal could actually have changed
-    for out, src in mins.items():
-        delta_aggs.append(
-            F.min(F.when(is_add, F.expr(src))).cast("long")
-            .alias(f"__ins_{out}")
-        )
-        delta_aggs.append(
-            F.min(F.when(~is_add, F.expr(src))).cast("long")
-            .alias(f"__del_{out}")
-        )
-    for out, src in maxs.items():
-        delta_aggs.append(
-            F.max(F.when(is_add, F.expr(src))).cast("long")
-            .alias(f"__ins_{out}")
-        )
-        delta_aggs.append(
-            F.max(F.when(~is_add, F.expr(src))).cast("long")
-            .alias(f"__del_{out}")
-        )
-    delta_aggs.append(
-        F.sum((~is_add).cast("long")).cast("long").alias("__n_del")
-    )
-    delta = chg.groupBy(*group_cols).agg(*delta_aggs)
-    mv = snap.snapshot_read(spark, mv_path)
-    joined = delta.join(mv, list(group_cols), "left")
-
-    recomputed = None
-    n_recompute = 0
-    n_changed = None
-    if mins or maxs:
-        # the at-risk probe AND the merged projection both consume this
-        # (group-cardinality-sized) frame; without a checkpoint each
-        # action re-reads the whole CDF window lineage (measured: the
-        # incremental refresh dropped ~3s at sf0.1)
-        joined = joined.localCheckpoint(eager=False)
-        # AT-RISK groups: a delete can only move an extreme if it
-        # removed a row TYING the stored one (deleted values strictly
-        # inside the envelope are spectators), or the group has no MV
-        # row yet but shrank inside this same window (its insert-side
-        # fold would overcount). NULL-valued deletes never qualify
-        # (min/max skip NULLs) — the NULL comparison is falsy here.
-        risk = F.lit(False)
-        for out in mins:
-            risk = risk | (F.col(f"__del_{out}") <= F.col(out))
-        for out in maxs:
-            risk = risk | (F.col(f"__del_{out}") >= F.col(out))
-        risk = (F.col("__n_del") > 0) & (
-            risk | F.col("n_rows").isNull()
-        )
-        # ONE action (round 15, was two) answers the at-risk count,
-        # the recompute's prune envelope (risk-conditional min/max),
-        # AND the merged delta's group count + NON-NULL group-key
-        # check: `merged` below is a 1:1 projection of this frame
-        # (the recompute left-join is per-group unique), so its count
-        # and NULL-group content are exactly this frame's.
-        probe_row = joined.agg(
-            F.count(F.lit(1)).alias("__n_groups"),
-            F.sum(_null_any(group_cols).cast("long")).alias("__nulls"),
-            F.count(F.when(risk, F.lit(1))).alias("__n"),
-            *[f for c in group_cols for f in (
-                F.min(F.when(risk, F.col(c))).alias(f"__lo_{c}"),
-                F.max(F.when(risk, F.col(c))).alias(f"__hi_{c}"),
-            )]
-        ).first()
-        if probe_row["__nulls"]:
-            raise _null_group_error(
-                "refresh_rollup", probe_row["__nulls"], group_cols)
-        n_changed = probe_row["__n_groups"]
-        n_recompute = probe_row["__n"]
-        if n_recompute:
-            risk_keys = joined.where(risk).select(*group_cols) \
-                .localCheckpoint(eager=False)
-            # stats-pruned base scan: bound each group column by the
-            # at-risk key envelope, drop every file the manifest
-            # proves disjoint, THEN semi-join exact
-            prune = {
-                c: (probe_row[f"__lo_{c}"], probe_row[f"__hi_{c}"])
-                for c in group_cols
-            }
-            recomputed = (
-                snap.snapshot_read(spark, base_path, version=base_v,
-                                   prune=prune)
-                .join(risk_keys, list(group_cols), "semi")
-                .groupBy(*group_cols)
-                .agg(
-                    *[F.min(F.expr(src)).cast("long").alias(f"__rc_{o}")
-                      for o, src in mins.items()],
-                    *[F.max(F.expr(src)).cast("long").alias(f"__rc_{o}")
-                      for o, src in maxs.items()],
-                    F.lit(1).alias("__rc"),
-                )
-            )
-            joined = joined.join(recomputed, list(group_cols), "left")
-
-    out_cols = [
-        *group_cols,
-        (F.coalesce("n_rows", F.lit(0)) + F.col("__d_rows"))
-        .cast("long").alias("n_rows"),
-        *[
-            # both sides coalesced: a change batch whose rows all
-            # carry NULL in a measure sums to a NULL delta, which
-            # must not wipe the group's accumulated value
-            (F.coalesce(out, F.lit(0))
-             + F.coalesce(F.col(f"__d_{out}"), F.lit(0)))
-            .cast("long").alias(out)
-            for out, _ in sub_cols
-        ],
-        *[
-            (F.coalesce(f"__cnt_{out}", F.lit(0))
-             + F.coalesce(F.col(f"__d_cnt_{out}"), F.lit(0)))
-            .cast("long").alias(f"__cnt_{out}")
-            for out in avgs
-        ],
-    ]
-    has_rc = F.col("__rc").isNotNull() if recomputed is not None \
-        else F.lit(False)
-    for out in mins:
-        # least/greatest skip NULLs in both engines: a new group takes
-        # the insert extreme, an untouched-extreme group keeps its own
-        folded = F.least(F.col(out), F.col(f"__ins_{out}"))
-        out_cols.append(
-            (F.when(has_rc, F.col(f"__rc_{out}")).otherwise(folded)
-             if recomputed is not None else folded)
-            .cast("long").alias(out)
-        )
-    for out in maxs:
-        folded = F.greatest(F.col(out), F.col(f"__ins_{out}"))
-        out_cols.append(
-            (F.when(has_rc, F.col(f"__rc_{out}")).otherwise(folded)
-             if recomputed is not None else folded)
-            .cast("long").alias(out)
-        )
-    merged = joined.select(*out_cols)
-    merged = _with_avg_cols(merged, avgs)
-    # the merge's probe/validate/write branches each consume this
-    # frame — materialize the (group-cardinality-sized) delta once
-    merged = merged.localCheckpoint(eager=False)
-    if n_changed is None:
-        # no min/max columns: the fused probe above never ran, so the
-        # count + NULL-group check is its own (only) pre-merge action
-        n_changed = _count_groups_checked(
-            merged, group_cols, "refresh_rollup")
-    # ONE atomic commit (round 13, conditional MERGE clauses): live
-    # groups upsert, groups the delta emptied DELETE in the same
-    # commit, and a group that both appeared and emptied inside the
-    # window never inserts — no reader-visible phantom window, no
-    # second commit. The n_rows>0 read contract and the self-heal
-    # probe remain only for MVs last written by a pre-round-13
-    # refresher.
-    res = snap.merge_into(
-        spark, mv_path, merged, on=list(group_cols),
-        txn=(app_id, base_v),
-        matched_delete_where="n_rows = 0",
-        insert_where="n_rows > 0",
-        small_source_hint=n_changed,
-    )
-    if res.get("skipped"):
-        return {"mv_version": res["version"], "base_version": base_v,
-                "groups_changed": 0, "groups_recomputed": 0,
-                "created": False}
-    return {"mv_version": snap.current_version(mv_path),
-            "base_version": base_v, "groups_changed": n_changed,
-            "groups_recomputed": n_recompute, "created": False}
 
 
 def coarsen_rollup(
@@ -664,45 +753,11 @@ def coarsen_rollup(
     agg-type metadata, same contract as the refreshers); ``version=``
     time-travels the answer. Reads through :func:`read_rollup`, so
     the legacy phantom filter applies."""
-    sums = list(sums or [])
-    mins = list(mins or [])
-    maxs = list(maxs or [])
-    avgs = list(avgs or [])
-    # same output-alias disjointness the refreshers enforce: a column
-    # named in two lists would mint two output columns with one name
-    # (ambiguous downstream), and n_rows/group columns are produced
-    # by the coarsening itself
-    _check_out_names(
-        "coarsen_rollup", sums + mins + maxs + avgs, group_cols)
-    mv = read_rollup(spark, mv_path, version=version)
-    have = set(mv.columns)
-    need = (
-        set(group_cols) | set(sums) | set(mins) | set(maxs)
-        | {f"__sum_{c}" for c in avgs} | {f"__cnt_{c}" for c in avgs}
-    )
-    missing = sorted(need - have)
-    if missing:
-        raise ValueError(
-            f"coarsen_rollup: {mv_path} has no columns {missing} — "
-            "group_cols must be a subset of the MV's group columns and "
-            "each aggregate list must name stored MV measure columns "
-            "(avgs need their __sum_/__cnt_ companions, i.e. the MV "
-            "was maintained with avgs=)"
-        )
-    return mv.groupBy(*group_cols).agg(
-        F.sum("n_rows").cast("long").alias("n_rows"),
-        *[F.sum(c).cast("long").alias(c) for c in sums],
-        *[F.min(c).cast("long").alias(c) for c in mins],
-        *[F.max(c).cast("long").alias(c) for c in maxs],
-        *[
-            F.when(
-                F.sum(f"__cnt_{c}") > 0,
-                F.sum(f"__sum_{c}").cast("long").cast("double")
-                / F.sum(f"__cnt_{c}").cast("long"),
-            ).alias(c)
-            for c in avgs
-        ],
-    )
+    mv, aggs = _recomposition(
+        spark, "coarsen_rollup", mv_path, group_cols, version,
+        sums, mins, maxs, avgs,
+        hint=", i.e. the MV was maintained with avgs=")
+    return mv.groupBy(*group_cols).agg(*aggs)
 
 
 def cube_rollup(
@@ -733,44 +788,13 @@ def cube_rollup(
     consumers filter on ``grouping_id`` (or NULL group values — the
     MV's NON-NULL group-key contract means a NULL here always means
     "rolled up", never data)."""
-    sums = list(sums or [])
-    mins = list(mins or [])
-    maxs = list(maxs or [])
-    avgs = list(avgs or [])
-    _check_out_names(
-        "cube_rollup",
-        sums + mins + maxs + avgs + ["grouping_id"], group_cols)
     if not group_cols:
         raise ValueError("cube_rollup: group_cols must be non-empty")
-    mv = read_rollup(spark, mv_path, version=version)
-    have = set(mv.columns)
-    need = (
-        set(group_cols) | set(sums) | set(mins) | set(maxs)
-        | {f"__sum_{c}" for c in avgs} | {f"__cnt_{c}" for c in avgs}
-    )
-    missing = sorted(need - have)
-    if missing:
-        raise ValueError(
-            f"cube_rollup: {mv_path} has no columns {missing} — "
-            "group_cols must be a subset of the MV's group columns and "
-            "each aggregate list must name stored MV measure columns "
-            "(avgs need their __sum_/__cnt_ companions)"
-        )
+    mv, aggs = _recomposition(
+        spark, "cube_rollup", mv_path, group_cols, version,
+        sums, mins, maxs, avgs, extra_out=["grouping_id"])
     return mv.cube(*group_cols).agg(
-        F.grouping_id().cast("long").alias("grouping_id"),
-        F.sum("n_rows").cast("long").alias("n_rows"),
-        *[F.sum(c).cast("long").alias(c) for c in sums],
-        *[F.min(c).cast("long").alias(c) for c in mins],
-        *[F.max(c).cast("long").alias(c) for c in maxs],
-        *[
-            F.when(
-                F.sum(f"__cnt_{c}") > 0,
-                F.sum(f"__sum_{c}").cast("long").cast("double")
-                / F.sum(f"__cnt_{c}").cast("long"),
-            ).alias(c)
-            for c in avgs
-        ],
-    )
+        F.grouping_id().cast("long").alias("grouping_id"), *aggs)
 
 
 # ---------------------------------------------------------------------------
@@ -851,10 +875,11 @@ def refresh_join_rollup(
       (inner-join semantics). Using F_old keeps the two terms
       disjoint: window fact changes are term 1's alone.
 
-    Both terms union row-wise and aggregate in ONE keyed shuffle; the
-    merge tail (group-cardinality frame, one atomic conditional-MERGE
-    commit, n_rows > 0 read contract for legacy tables) matches
-    :func:`refresh_rollup`.
+    Both terms project into one signed-rows frame, union row-wise and
+    aggregate in ONE keyed shuffle; the shared maintenance core then
+    applies the delta exactly as for :func:`refresh_rollup`
+    (group-cardinality frame, one atomic conditional-MERGE commit,
+    n_rows > 0 read contract for legacy tables).
 
     ``mins`` / ``maxs`` (the r13 verdict's one refresher asymmetry):
     the signed union IS an exact signed multiset of joined rows
@@ -914,127 +939,65 @@ def refresh_join_rollup(
     (checked inside the existing count action) instead of silently
     accumulating duplicate NULL-group rows.
     """
-    avgs = dict(avgs or {})
-    mins = dict(mins or {})
-    maxs = dict(maxs or {})
+    fn = "refresh_join_rollup"
     if on_dim_churn not in ("recompute", "error"):
         raise ValueError(
-            "refresh_join_rollup: on_dim_churn must be 'recompute' or "
+            f"{fn}: on_dim_churn must be 'recompute' or "
             f"'error', got {on_dim_churn!r}"
         )
-    _check_out_names(
-        "refresh_join_rollup",
-        [*sums] + [*avgs] + [*mins] + [*maxs]
-        + [f"__sum_{o}" for o in avgs] + [f"__cnt_{o}" for o in avgs],
-        group_cols,
-    )
+    r = _Rollup.of(fn, group_cols, sums, avgs, mins, maxs)
+    g = r.group_cols
     fact_v = snap.current_version(fact_path)
     dim_v = snap.current_version(dim_path)
     if fact_v is None or dim_v is None:
-        raise ValueError(
-            "refresh_join_rollup: fact and dim must be snapshot tables"
-        )
+        raise ValueError(f"{fn}: fact and dim must be snapshot tables")
     # ONE manifest-only size estimate gates every dim broadcast this
     # refresh plants (all sites join the dim at the same pinned dim_v)
     dim_fits = (
         _bcast_est_bytes(dim_path, dim_v) <= broadcast_threshold_bytes
     )
+    n_dim_churn = 0
 
-    sub_cols = list(sums.items()) + [
-        (f"__sum_{out}", src) for out, src in avgs.items()
-    ]
+    def result(mv_version, changed=0, recomputed=0, created=False,
+               full_recompute=False):
+        return {"mv_version": mv_version, "fact_version": fact_v,
+                "dim_version": dim_v, "groups_changed": changed,
+                "groups_recomputed": recomputed, "created": created,
+                "full_recompute": full_recompute,
+                "dim_keys_churned": n_dim_churn, "dim_broadcast": dim_fits}
 
-    def _joined(fv: int, dv: int) -> DataFrame:
-        f = snap.snapshot_read(spark, fact_path, version=fv)
-        d = snap.snapshot_read(spark, dim_path, version=dv)
+    def captured() -> tuple[DataFrame, DataFrame]:
+        # fact and dim at the captured pair. The disjointness is
+        # checked at create and re-checked on every refresh (schema
+        # evolution on either side can rot it); driver-side, no job
+        f = snap.snapshot_read(spark, fact_path, version=fact_v)
+        d = snap.snapshot_read(spark, dim_path, version=dim_v)
         overlap = (set(f.columns) & set(d.columns)) - set(on)
         if overlap:
             raise ValueError(
-                "refresh_join_rollup: fact and dim column names must "
-                f"be disjoint apart from the join key; both carry "
+                f"{fn}: fact and dim column names must be "
+                f"disjoint apart from the join key; both carry "
                 f"{sorted(overlap)}"
             )
+        return f, d
+
+    def full_join(f: DataFrame, d: DataFrame) -> DataFrame:
         # full fact scan against the dim: hint only an under-threshold
         # dim; over it there is no small side — leave AQE to choose
         return f.join(F.broadcast(d) if dim_fits else d, list(on))
 
-    def _full_agg(fv: int, dv: int) -> DataFrame:
-        full = _joined(fv, dv).groupBy(*group_cols).agg(
-            F.count(F.lit(1)).cast("long").alias("n_rows"),
-            *[F.sum(F.expr(src)).cast("long").alias(o)
-              for o, src in sub_cols],
-            *[F.count(F.expr(src)).cast("long").alias(f"__cnt_{o}")
-              for o, src in avgs.items()],
-            *[F.min(F.expr(src)).cast("long").alias(o)
-              for o, src in mins.items()],
-            *[F.max(F.expr(src)).cast("long").alias(o)
-              for o, src in maxs.items()],
-        )
-        return _with_avg_cols(full, avgs)
-
     if snap.current_version(mv_path) is None:
-        # same create-time NON-NULL group-key enforcement as
-        # refresh_rollup (see its create path) — round 15: the check
-        # rides the create write as an Observation; a NULL-group
-        # aggregate removes the just-written table and raises the
-        # same error (no separate count action, no checkpoint)
-        full, obs = _observe_null_groups(
-            _full_agg(fact_v, dim_v), group_cols)
-        v = snap.snapshot_create(
-            spark, full, mv_path,
-            stats_cols=[*group_cols, "n_rows"],
-            # cursor + atomic-read contract in the one create commit
-            # (round 14) — see refresh_rollup's create for why this is
-            # sound from birth for a round-13+ refresher
-            txn=[(app_id, _pack_cursor(fact_v, dim_v)),
-                 (_CONTRACT_APP, 1)],
-        )
-        _raise_if_null_groups(obs, mv_path, group_cols,
-                              "refresh_join_rollup (create)")
-        return {"mv_version": v, "fact_version": fact_v,
-                "dim_version": dim_v, "groups_changed": -1,
-                "groups_recomputed": 0,
-                "created": True, "full_recompute": False,
-                "dim_keys_churned": 0, "dim_broadcast": dim_fits}
-
-    mark = snap.last_txn_version(mv_path, app_id)
-    if mark is None:
-        raise ValueError(
-            f"refresh_join_rollup: {mv_path} exists but carries no "
-            f"{app_id!r} cursor — it was not created by this refresher"
-        )
-    f0, d0 = _unpack_cursor(mark)
-    # self-heal phantom zero-groups before the cursor check (same
-    # two-tier crash-window probe as refresh_rollup: manifest stats
-    # first, Spark scan only when a phantom is possible)
-    if _zero_groups_possible(mv_path) and snap.snapshot_read(
-            spark, mv_path).where("n_rows = 0").limit(1).count():
-        snap.delete_where(spark, mv_path, "n_rows = 0", mode="mor")
+        full = r.full(full_join(*captured()))
+        return result(_create(spark, full, mv_path, g,
+                              (app_id, _pack_cursor(fact_v, dim_v)), fn),
+                      -1, created=True)
+    f0, d0 = _unpack_cursor(_open_cursor(spark, mv_path, app_id, fn))
     if f0 >= fact_v and d0 >= dim_v:
-        return {"mv_version": snap.current_version(mv_path),
-                "fact_version": fact_v, "dim_version": dim_v,
-                "groups_changed": 0, "groups_recomputed": 0,
-                "created": False,
-                "full_recompute": False, "dim_keys_churned": 0,
-                "dim_broadcast": dim_fits}
+        return result(snap.current_version(mv_path))
+    fact_now, dim_now = captured()
+    txn = (app_id, _pack_cursor(fact_v, dim_v))
 
-    dim_now = snap.snapshot_read(spark, dim_path, version=dim_v)
-    # the creation-time disjointness can rot (schema evolution on
-    # either side) — re-check on every refresh; driver-side, no job
-    fact_cols = set(
-        snap.snapshot_read(spark, fact_path, version=fact_v).columns
-    )
-    overlap = (fact_cols & set(dim_now.columns)) - set(on)
-    if overlap:
-        raise ValueError(
-            "refresh_join_rollup: fact and dim column names must be "
-            f"disjoint apart from the join key; both carry "
-            f"{sorted(overlap)}"
-        )
-
-    n_dim_churn = 0
     dim_delta = None
-    churn_row = None
     if dim_v > d0:
         dim_delta = snap.snapshot_changes(
             spark, dim_path, key_cols=list(on), v_from=d0, v_to=dim_v
@@ -1057,7 +1020,7 @@ def refresh_join_rollup(
         if n_dim_churn / dim_total > dim_churn_threshold:
             if on_dim_churn == "error":
                 raise RuntimeError(
-                    f"refresh_join_rollup: {n_dim_churn} of {dim_total} "
+                    f"{fn}: {n_dim_churn} of {dim_total} "
                     f"dim keys churned in the window (> threshold "
                     f"{dim_churn_threshold}) — term-2 maintenance would "
                     "approach a full fact scan; rebuild the MV or pass "
@@ -1066,67 +1029,31 @@ def refresh_join_rollup(
             # full recompute at the captured pair: new aggregate merged
             # over the MV; groups that vanished entirely surface as
             # n_rows=0 rows so the conditional merge deletes them in
-            # the same commit
-            full = _full_agg(fact_v, dim_v).localCheckpoint(eager=False)
+            # the same commit (and declines to insert them — their
+            # zero placeholders only satisfy the union schema)
+            full = r.full(full_join(fact_now, dim_now)) \
+                .localCheckpoint(eager=False)
             gone = (
-                snap.snapshot_read(spark, mv_path)
-                .select(*group_cols)
-                .join(full.select(*group_cols), list(group_cols),
-                      "left_anti")
-                .select(
-                    *group_cols,
-                    F.lit(0).cast("long").alias("n_rows"),
-                    *[F.lit(0).cast("long").alias(o) for o, _ in sub_cols],
-                    *[F.lit(0).cast("long").alias(f"__cnt_{o}")
-                      for o in avgs],
-                    # vanished groups never surface (n_rows=0 deletes
-                    # in-commit and declines to insert) — the extreme
-                    # placeholders only satisfy the union schema
-                    *[F.lit(0).cast("long").alias(o)
-                      for o in [*mins, *maxs]],
-                )
+                snap.snapshot_read(spark, mv_path).select(*g)
+                .join(full.select(*g), g, "left_anti")
+                .select(*g, *[F.lit(0).cast("long").alias(c)
+                              for c in full.columns
+                              if c not in (*g, *r.avgs)])
             )
             merged = full.unionByName(
-                _with_avg_cols(gone, avgs)
+                _with_avg_cols(gone, r.avgs)
             ).localCheckpoint(eager=False)
-            n_changed = _count_groups_checked(
-                merged, group_cols, "refresh_join_rollup")
-            res = snap.merge_into(
-                spark, mv_path, merged, on=list(group_cols),
-                txn=(app_id, _pack_cursor(fact_v, dim_v)),
-                matched_delete_where="n_rows = 0",
-                insert_where="n_rows > 0",
-                small_source_hint=n_changed,
-            )
-            if res.get("skipped"):
-                # a racing refresher landed this (or a later) window
-                # first — report the no-op, not the loser's workload
-                return {"mv_version": res["version"],
-                        "fact_version": fact_v, "dim_version": dim_v,
-                        "groups_changed": 0, "groups_recomputed": 0,
-                        "created": False,
-                        "full_recompute": False,
-                        "dim_keys_churned": n_dim_churn,
-                        "dim_broadcast": dim_fits}
-            return {"mv_version": snap.current_version(mv_path),
-                    "fact_version": fact_v, "dim_version": dim_v,
-                    "groups_changed": n_changed, "groups_recomputed": 0,
-                    "created": False,
-                    "full_recompute": True,
-                    "dim_keys_churned": n_dim_churn,
-                    "dim_broadcast": dim_fits}
+            n_changed = _count_groups_checked(merged, g, fn)
+            v, applied = _merge_groups(spark, mv_path, merged, g, txn,
+                                       n_changed)
+            return result(v, n_changed if applied else 0,
+                          full_recompute=applied)
 
-    sign_cols = [F.col(c) for c in group_cols]
-    # min/max measure expressions ride the signed union as raw values
-    # (__x_) so the delta can split them into insert-side folds and
-    # delete-side at-risk probes per group
-    xms = {**mins, **maxs}
     parts = []
     if fact_v > f0:
         chg = snap.snapshot_changes(
             spark, fact_path, v_from=f0, v_to=fact_v, row_ids=True
         )
-        is_add = F.col("_change_type").isin("insert", "update_postimage")
         if dim_fits:
             pair = chg.join(F.broadcast(dim_now), list(on))
         else:
@@ -1141,17 +1068,7 @@ def refresh_join_rollup(
             pair = _maybe_broadcast(
                 chg, chg_est, broadcast_threshold_bytes
             ).join(dim_now, list(on))
-        parts.append(
-            pair.select(
-                *sign_cols,
-                F.when(is_add, F.lit(1)).otherwise(F.lit(-1)).alias("__sign"),
-                *[F.expr(src).alias(f"__m_{o}") for o, src in sub_cols],
-                *[F.expr(src).isNotNull().cast("long").alias(f"__p_{o}")
-                  for o, src in avgs.items()],
-                *[F.expr(src).cast("long").alias(f"__x_{o}")
-                  for o, src in xms.items()],
-            )
-        )
+        parts.append(r.signed(pair, _sign()))
     if dim_delta is not None:
         # stats-prune the old-fact read to the churned keys' envelope
         # (file-granular; exact semantics restored by the join itself)
@@ -1161,11 +1078,10 @@ def refresh_join_rollup(
         fact_old = snap.snapshot_read(
             spark, fact_path, version=f0, prune=prune
         )
-        d_add = F.col("_change_type").isin("insert", "update_postimage")
         signed_dim = dim_delta.select(
             *on,
             *[c for c in dim_now.columns if c not in on],
-            F.when(d_add, F.lit(1)).otherwise(F.lit(-1)).alias("__sign"),
+            _sign().alias("__sign"),
         )
         # the signed dim DELTA is churn-bounded (<= threshold fraction
         # of the dim) but a fraction of a huge dim can still be huge —
@@ -1177,212 +1093,43 @@ def refresh_join_rollup(
         signed_dim = _maybe_broadcast(
             signed_dim, sd_est, broadcast_threshold_bytes
         )
-        parts.append(
-            fact_old.join(signed_dim, list(on)).select(
-                *sign_cols,
-                F.col("__sign"),
-                *[F.expr(src).alias(f"__m_{o}") for o, src in sub_cols],
-                *[F.expr(src).isNotNull().cast("long").alias(f"__p_{o}")
-                  for o, src in avgs.items()],
-                *[F.expr(src).cast("long").alias(f"__x_{o}")
-                  for o, src in xms.items()],
-            )
-        )
-
+        parts.append(r.signed(fact_old.join(signed_dim, list(on)),
+                              F.col("__sign")))
     u = parts[0]
     for p in parts[1:]:
         u = u.unionByName(p)
-    pos = F.col("__sign") > 0
-    delta_aggs = [
-        F.sum("__sign").cast("long").alias("__d_rows"),
-        *[F.sum(F.col("__sign") * F.col(f"__m_{o}")).cast("long")
-          .alias(f"__d_{o}") for o, _ in sub_cols],
-        *[F.sum(F.col("__sign") * F.col(f"__p_{o}")).cast("long")
-          .alias(f"__d_cnt_{o}") for o in avgs],
-    ]
-    # per-group extremes of the signed union: positive rows fold in
-    # monotonically, negative rows decide which groups are at risk —
-    # identical rule to refresh_rollup because the union is an exact
-    # signed multiset of joined rows (see docstring for why spurious
-    # cancel-pairs are safe: they recompute, never corrupt the fold)
-    for out in mins:
-        delta_aggs.append(F.min(F.when(pos, F.col(f"__x_{out}")))
-                          .cast("long").alias(f"__ins_{out}"))
-        delta_aggs.append(F.min(F.when(~pos, F.col(f"__x_{out}")))
-                          .cast("long").alias(f"__del_{out}"))
-    for out in maxs:
-        delta_aggs.append(F.max(F.when(pos, F.col(f"__x_{out}")))
-                          .cast("long").alias(f"__ins_{out}"))
-        delta_aggs.append(F.max(F.when(~pos, F.col(f"__x_{out}")))
-                          .cast("long").alias(f"__del_{out}"))
-    if xms:
-        delta_aggs.append(
-            F.sum((~pos).cast("long")).cast("long").alias("__n_del"))
-    delta = u.groupBy(*group_cols).agg(*delta_aggs)
-    mv = snap.snapshot_read(spark, mv_path)
-    joined = delta.join(mv, list(group_cols), "left")
 
-    recomputed = None
-    n_recompute = 0
-    n_changed = None
-    if xms:
-        # at-risk probe + merged projection both consume this frame
-        joined = joined.localCheckpoint(eager=False)
-        risk = F.lit(False)
-        for out in [*mins, *maxs]:
-            cmp_risk = (
-                (F.col(f"__del_{out}") <= F.col(out)) if out in mins
-                else (F.col(f"__del_{out}") >= F.col(out))
-            )
-            # a NULL stored extreme (every group row carries NULL in
-            # the measure) makes the tie comparison NULL — but a
-            # NON-NULL negative against it can only be a spurious
-            # cancel-pair (a genuine delete of value v implies v was
-            # in the group, so the stored extreme was not NULL), and
-            # its positive twin would otherwise fold a value that is
-            # not in the group. Treat it as at-risk explicitly; the
-            # recompute restores the NULL. (Single-table
-            # refresh_rollup has no spurious negatives, so its rule
-            # needs no such term.)
-            risk = risk | cmp_risk | (
-                F.col(f"__del_{out}").isNotNull() & F.col(out).isNull()
-            )
-        risk = (F.col("__n_del") > 0) & (risk | F.col("n_rows").isNull())
-        # one fused action (round 15): at-risk count + prune envelope
-        # + the merged delta's group count and NON-NULL group-key
-        # check — `merged` below is a 1:1 projection of this frame
-        # (see refresh_rollup's fused probe for the argument)
-        probe_row = joined.agg(
-            F.count(F.lit(1)).alias("__n_groups"),
-            F.sum(_null_any(group_cols).cast("long")).alias("__nulls"),
-            F.count(F.when(risk, F.lit(1))).alias("__n"),
-            *[f for c in group_cols for f in (
-                F.min(F.when(risk, F.col(c))).alias(f"__lo_{c}"),
-                F.max(F.when(risk, F.col(c))).alias(f"__hi_{c}"),
-            )]
-        ).first()
-        if probe_row["__nulls"]:
-            raise _null_group_error(
-                "refresh_join_rollup", probe_row["__nulls"], group_cols)
-        n_changed = probe_row["__n_groups"]
-        n_recompute = probe_row["__n"]
-        if n_recompute:
-            risk_keys = joined.where(risk).select(*group_cols) \
-                .localCheckpoint(eager=False)
-            # recompute at-risk groups against fact |><| dim at the
-            # CAPTURED pair, manifest-pruned twice: the dim read by
-            # the at-risk groups' dim-side envelope, the fact read by
-            # the surviving dim keys' join-key envelope (one dim-sized
-            # bounds action) plus any fact-side group bounds — cost
-            # tracks at-risk-group data, not base size
-            dim_group = [c for c in group_cols if c in dim_now.columns]
-            fact_group = [c for c in group_cols if c not in dim_group]
-            d_prune = {
-                c: (probe_row[f"__lo_{c}"], probe_row[f"__hi_{c}"])
-                for c in dim_group
-                if probe_row[f"__lo_{c}"] is not None
-            }
-            risk_dim = snap.snapshot_read(
-                spark, dim_path, version=dim_v, prune=d_prune or None)
-            if dim_group:
-                risk_dim = risk_dim.join(
-                    risk_keys.select(*dim_group).distinct(),
-                    dim_group, "semi")
-            risk_dim = risk_dim.localCheckpoint(eager=False)
-            on_row = risk_dim.agg(*[
-                f for c in on for f in (
-                    F.min(c).alias(f"__lo_{c}"),
-                    F.max(c).alias(f"__hi_{c}"),
-                )
-            ]).first()
-            f_prune = {
-                c: (probe_row[f"__lo_{c}"], probe_row[f"__hi_{c}"])
-                for c in fact_group
-                if probe_row[f"__lo_{c}"] is not None
-            }
-            f_prune.update({
-                c: (on_row[f"__lo_{c}"], on_row[f"__hi_{c}"])
-                for c in on if on_row[f"__lo_{c}"] is not None
-            })
-            fact_base = snap.snapshot_read(
-                spark, fact_path, version=fact_v, prune=f_prune or None)
-            recomputed = (
-                fact_base
-                .join(F.broadcast(risk_dim) if dim_fits else risk_dim,
-                      list(on))
-                .join(risk_keys, list(group_cols), "semi")
-                .groupBy(*group_cols)
-                .agg(
-                    *[F.min(F.expr(src)).cast("long").alias(f"__rc_{o}")
-                      for o, src in mins.items()],
-                    *[F.max(F.expr(src)).cast("long").alias(f"__rc_{o}")
-                      for o, src in maxs.items()],
-                    F.lit(1).alias("__rc"),
-                )
-            )
-            joined = joined.join(recomputed, list(group_cols), "left")
+    def at_risk_rows(probe_row, risk_keys):
+        # at-risk groups recompute against fact |><| dim at the
+        # CAPTURED pair, manifest-pruned twice: the dim read by the
+        # at-risk groups' dim-side envelope, the fact read by the
+        # surviving dim keys' join-key envelope (one dim-sized bounds
+        # action) plus any fact-side group bounds — cost tracks
+        # at-risk-group data, not base size
+        dim_group = [c for c in g if c in dim_now.columns]
+        fact_group = [c for c in g if c not in dim_group]
 
-    out_cols = [
-        *group_cols,
-        (F.coalesce("n_rows", F.lit(0)) + F.col("__d_rows"))
-        .cast("long").alias("n_rows"),
-        *[
-            (F.coalesce(o, F.lit(0))
-             + F.coalesce(F.col(f"__d_{o}"), F.lit(0)))
-            .cast("long").alias(o)
-            for o, _ in sub_cols
-        ],
-        *[
-            (F.coalesce(f"__cnt_{o}", F.lit(0))
-             + F.coalesce(F.col(f"__d_cnt_{o}"), F.lit(0)))
-            .cast("long").alias(f"__cnt_{o}")
-            for o in avgs
-        ],
-    ]
-    has_rc = F.col("__rc").isNotNull() if recomputed is not None \
-        else F.lit(False)
-    for out in mins:
-        folded = F.least(F.col(out), F.col(f"__ins_{out}"))
-        out_cols.append(
-            (F.when(has_rc, F.col(f"__rc_{out}")).otherwise(folded)
-             if recomputed is not None else folded)
-            .cast("long").alias(out)
-        )
-    for out in maxs:
-        folded = F.greatest(F.col(out), F.col(f"__ins_{out}"))
-        out_cols.append(
-            (F.when(has_rc, F.col(f"__rc_{out}")).otherwise(folded)
-             if recomputed is not None else folded)
-            .cast("long").alias(out)
-        )
-    merged = joined.select(*out_cols)
-    merged = _with_avg_cols(merged, avgs)
-    merged = merged.localCheckpoint(eager=False)
-    if n_changed is None:
-        # no min/max columns: the fused probe never ran — the count +
-        # NULL-group check is its own (only) pre-merge action
-        n_changed = _count_groups_checked(
-            merged, group_cols, "refresh_join_rollup")
-    # one atomic commit — see refresh_rollup's merge for the contract
-    res = snap.merge_into(
-        spark, mv_path, merged, on=list(group_cols),
-        txn=(app_id, _pack_cursor(fact_v, dim_v)),
-        matched_delete_where="n_rows = 0",
-        insert_where="n_rows > 0",
-        small_source_hint=n_changed,
-    )
-    if res.get("skipped"):
-        return {"mv_version": res["version"], "fact_version": fact_v,
-                "dim_version": dim_v, "groups_changed": 0,
-                "groups_recomputed": 0,
-                "created": False, "full_recompute": False,
-                "dim_keys_churned": n_dim_churn,
-                "dim_broadcast": dim_fits}
-    return {"mv_version": snap.current_version(mv_path),
-            "fact_version": fact_v, "dim_version": dim_v,
-            "groups_changed": n_changed,
-            "groups_recomputed": n_recompute,
-            "created": False,
-            "full_recompute": False, "dim_keys_churned": n_dim_churn,
-            "dim_broadcast": dim_fits}
+        def env(row, cols):
+            return {c: (row[f"__lo_{c}"], row[f"__hi_{c}"])
+                    for c in cols if row[f"__lo_{c}"] is not None}
 
+        risk_dim = snap.snapshot_read(
+            spark, dim_path, version=dim_v,
+            prune=env(probe_row, dim_group) or None)
+        if dim_group:
+            risk_dim = risk_dim.join(
+                risk_keys.select(*dim_group).distinct(), dim_group, "semi")
+        risk_dim = risk_dim.localCheckpoint(eager=False)
+        on_row = risk_dim.agg(*[
+            f for c in on for f in (
+                F.min(c).alias(f"__lo_{c}"), F.max(c).alias(f"__hi_{c}"),
+            )
+        ]).first()
+        f_prune = {**env(probe_row, fact_group), **env(on_row, on)}
+        fact_base = snap.snapshot_read(
+            spark, fact_path, version=fact_v, prune=f_prune or None)
+        return fact_base.join(
+            F.broadcast(risk_dim) if dim_fits else risk_dim, list(on))
+
+    return result(*_apply_delta(spark, mv_path, r, r.delta(u),
+                                at_risk_rows, fn, txn))

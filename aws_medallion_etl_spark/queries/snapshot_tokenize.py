@@ -812,6 +812,7 @@ def _stage_ordered_batches(df, id_col: str, src_dir: str, n: int = 4):
     order (bounded test-fixture staging shared by str10/str11/str14;
     a production feed is already ordered by arrival). The caller has
     already created an EMPTY ``src_dir``."""
+    import functools
     import glob as _glob
     import os as _os
     import shutil as _shutil
@@ -841,11 +842,11 @@ def _stage_ordered_batches(df, id_col: str, src_dir: str, n: int = 4):
     # overlap them (guide §2.6) so the stream sees all n files at the
     # same cost as the slowest one; each file's mtime is SET explicitly
     # after its copy, so completion order cannot perturb the
-    # oldest-first delivery the stream relies on
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=min(3, n)) as pool:
-        list(pool.map(_stage_one, range(n)))
+    # oldest-first delivery the stream relies on. The writes keep the
+    # caller's job group (fuzzy._run_overlapped).
+    fuzzy._run_overlapped(
+        df.sparkSession, *[functools.partial(_stage_one, i) for i in range(n)]
+    )
 
 
 @query("str10_stream_pack", _PACK_GREEDY_SQL)

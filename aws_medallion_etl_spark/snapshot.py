@@ -505,6 +505,22 @@ def _dv_totals_driver(dv_dir: str) -> dict[str, int] | None:
     return totals
 
 
+def _parquet_rows_driver(parquet_dir: str) -> int | None:
+    """Row count of a just-written parquet dir from its footers, ON
+    THE DRIVER — zero Spark jobs. None (caller takes the Spark path)
+    when a footer is unreadable."""
+    try:
+        import pyarrow.parquet as pq
+
+        return sum(
+            pq.ParquetFile(os.path.join(parquet_dir, name)).metadata.num_rows
+            for name in os.listdir(parquet_dir)
+            if name.endswith(".parquet") and not name.startswith(("_", "."))
+        )
+    except Exception:
+        return None
+
+
 def _mint_dv(
     spark: SparkSession,
     root: str,
@@ -551,8 +567,10 @@ def _mint_dv(
     Returns ``(dv_rel, totals, new_counts)``: the manifest-relative
     sidecar path, per-file TOTAL dead rows (the touched entries' new
     ``dv_rows``), and per-file rows newly marked by THIS call (the
-    user-facing deleted/updated counts). Empty ``hits`` → empty
-    sidecar dir, both dicts empty — :func:`_mark_dead` removes it.
+    user-facing deleted/updated counts). Empty ``hits`` → both dicts
+    empty and an empty sidecar dir, which :func:`_mark_dead` removes;
+    when prior DVs forced staging, the staged footers show the zero
+    and no sidecar is read or written at all.
     Both counts come from the WRITTEN sidecar, so the manifest can
     never disagree with the bytes on disk.
     """
@@ -589,6 +607,14 @@ def _mint_dv(
         tmp_rel = os.path.join(_DELETES_DIR, f"stage-{uuid.uuid4().hex[:8]}")
         tmp_dir = os.path.join(root, tmp_rel)
         hits.write.mode("error").parquet(tmp_dir)
+        if _parquet_rows_driver(tmp_dir) == 0:
+            # zero hits (a zero-match MOR DML on a table with DVs):
+            # reading the carried sidecars, run-encoding and writing
+            # an empty sidecar would change nothing — an empty mint
+            import shutil
+
+            shutil.rmtree(tmp_dir, ignore_errors=True)
+            return dv_rel, {}, {}
         staged = spark.read.schema(
             "file string, row_index long"
         ).parquet(tmp_dir)

@@ -2804,10 +2804,12 @@ _DML_CONTRACT_RESULTS = {
 # Spark jobs per step, keyed (mode, row_tracking). Under row tracking
 # the MERGE takes a second adaptive plan on some runs (its row-id
 # join's stages are submitted concurrently): one more job, and under
-# cow 3 files added instead of 4 — that step admits either plan.
+# cow 3 files added instead of 4 — that step admits either plan. A
+# zero-match mor step on a table that already carries DVs stages its
+# (empty) hits and stops there: no carried-sidecar read, no encode.
 _DML_CONTRACT_JOBS = {
-    ("mor", False): [2, 8, 5, 5, 0, 9, 8, 17],
-    ("mor", True): [2, 10, 6, 5, 0, 9, 8, 23],
+    ("mor", False): [2, 8, 2, 2, 0, 9, 5, 17],
+    ("mor", True): [2, 10, 3, 2, 0, 9, 5, 23],
     ("cow", False): [4, 4, 2, 2, 0, 6, 5, 10],
     ("cow", True): [5, 7, 3, 2, 0, 7, 5, 15],
 }
@@ -4336,6 +4338,138 @@ def test_refresh_join_rollup_full_recompute_respects_skipped(
     monkeypatch.setattr(mvm.snap, "snapshot_changes", orig_changes)
     assert fired["done"]
     assert r["groups_changed"] == 0 and not r["full_recompute"]
+
+
+def _mv_contract_run(spark, tmp_path):
+    """Run the fixed MV refresh contract script. Before each refresh
+    its base mutations land; after it the MV's rows must equal a full
+    recompute. Yields ``(step, return dict, Spark jobs of the refresh
+    call)``."""
+    from aws_medallion_etl_spark import mv as mvmod
+
+    base = str(tmp_path / "base")
+    sn.snapshot_create(
+        spark, spark.range(40).select(
+            F.col("id").alias("k"), (F.col("id") % 4).alias("g"),
+            (F.col("id") * 10).alias("cents"),
+        ).repartitionByRange(2, "k"), base, ["k"], row_tracking=True)
+    _, fact, dim, _, _ = _join_mv_fixture(spark, tmp_path)
+    sums = {"sum_cents": "cents"}
+    ext = dict(mins={"min_cents": "cents"}, maxs={"max_cents": "cents"},
+               avgs={"avg_cents": "cents"})
+    full_aggs = {
+        "sum_cents": F.sum("cents").cast("long"),
+        "min_cents": F.min("cents").cast("long"),
+        "max_cents": F.max("cents").cast("long"),
+        "avg_cents": F.sum("cents").cast("long").cast("double")
+        / F.count("cents"),
+    }
+
+    def rollup(name, **kw):
+        return name, lambda: mvmod.refresh_rollup(
+            spark, base, str(tmp_path / name), ["g"], sums, **kw)
+
+    def join(name, **kw):
+        return name, lambda: mvmod.refresh_join_rollup(
+            spark, fact, dim, str(tmp_path / name), on=["d"],
+            group_cols=["g"], sums=sums, **kw)
+
+    def upd(path, where, sets):
+        return lambda: sn.update_where(spark, path, where, sets, mode="mor")
+
+    def dele(path, where):
+        return lambda: sn.delete_where(spark, path, where, mode="mor")
+
+    steps = [
+        ("create_sums", [], rollup("mv_s")),
+        ("create_ext", [], rollup("mv_x", **ext)),
+        # value update, a row moving to a new group, a spectator delete
+        ("sums", [upd(base, "k % 10 = 3", {"cents": "cents + 7"}),
+                  upd(base, "k = 5", {"g": "g + 10"}),
+                  dele(base, "k = 6")], rollup("mv_s")),
+        # k=36 ties g0's max, k=2 g2's min, the k=3 preimage g3's min;
+        # k=17 is a spectator
+        ("ext_tied", [dele(base, "k in (36, 2, 17)")], rollup("mv_x", **ext)),
+        ("ext_replay", [], rollup("mv_x", **ext)),
+        ("join_create", [], join("jmv", avgs=ext["avgs"])),
+        ("join_fact", [upd(fact, "k % 7 = 3", {"cents": "cents + 5"}),
+                       dele(fact, "k % 5 = 0")],
+         join("jmv", avgs=ext["avgs"])),
+        ("join_dim", [upd(dim, "d = 4", {"g": "'moved'"})],
+         join("jmv", avgs=ext["avgs"])),
+        # 5 of 10 dim keys churned: over the 0.2 threshold
+        ("join_full", [upd(dim, "d % 2 = 0", {"g": "'bulk'"})],
+         join("jmv", avgs=ext["avgs"])),
+        ("join_ext_create", [], join("jmv_x", **ext)),
+        # k=99 ties g0's max; d=1 leaves g1 (its min) for a new group
+        ("join_ext", [dele(fact, "k = 99"),
+                      upd(dim, "d = 1", {"g": "'moved'"})],
+         join("jmv_x", **ext)),
+    ]
+    jsc = spark.sparkContext._jsc.sc().dagScheduler()
+    for step, mutations, (name, refresh) in steps:
+        for m in mutations:
+            m()
+        jobs0 = jsc.numTotalJobs()
+        res = refresh()
+        jobs = jsc.numTotalJobs() - jobs0
+        got = mvmod.read_rollup(spark, str(tmp_path / name))
+        measures = sorted(c for c in full_aggs if c in got.columns)
+        src = sn.snapshot_read(spark, base) if name.startswith("mv") else (
+            sn.snapshot_read(spark, fact)
+            .join(sn.snapshot_read(spark, dim), "d"))
+        want = src.groupBy("g").agg(
+            F.count(F.lit(1)).cast("long").alias("n_rows"),
+            *[full_aggs[m].alias(m) for m in measures])
+        assert sorted(got.select("g", "n_rows", *measures).collect()) \
+            == sorted(want.collect()), step
+        yield step, res, jobs
+
+
+def _mvc_roll(mv_v, base_v, changed, recomputed, created=False):
+    return {"mv_version": mv_v, "base_version": base_v,
+            "groups_changed": changed, "groups_recomputed": recomputed,
+            "created": created}
+
+
+def _mvc_join(mv_v, fact_v, dim_v, changed, recomputed, churned,
+              created=False, full_recompute=False):
+    return {"mv_version": mv_v, "fact_version": fact_v,
+            "dim_version": dim_v, "groups_changed": changed,
+            "groups_recomputed": recomputed, "created": created,
+            "full_recompute": full_recompute,
+            "dim_keys_churned": churned, "dim_broadcast": True}
+
+
+# the MV refresh contract script's steps: (return dict, Spark jobs of
+# the refresh call); the job counts held over repeated runs
+_MV_CONTRACT = {
+    "create_sums": (_mvc_roll(0, 0, -1, 0, True), 2),
+    "create_ext": (_mvc_roll(0, 0, -1, 0, True), 2),
+    "sums": (_mvc_roll(1, 3, 4, 0), 17),
+    "ext_tied": (_mvc_roll(1, 4, 5, 3), 22),
+    "ext_replay": (_mvc_roll(1, 4, 0, 0), 0),
+    "join_create": (_mvc_join(0, 0, 0, -1, 0, 0, created=True), 3),
+    "join_fact": (_mvc_join(1, 2, 0, 3, 0, 0), 18),
+    "join_dim": (_mvc_join(2, 2, 1, 2, 0, 1), 20),
+    "join_full": (_mvc_join(3, 2, 2, 5, 0, 5, full_recompute=True), 20),
+    "join_ext_create": (_mvc_join(0, 2, 2, -1, 0, 0, created=True), 5),
+    "join_ext": (_mvc_join(1, 3, 3, 3, 2, 1), 43),
+}
+
+
+def test_mv_refresh_contract(spark, tmp_path):
+    """refresh_rollup / refresh_join_rollup keep their exact
+    observable contract — return dict, Spark jobs per refresh, MV rows
+    equal to a full recompute — across create, sums-only, a min/max
+    window whose deletes tie stored extremes, replay, a fact-only
+    join window, a dim-delta window, an over-threshold full recompute
+    and a join min/max window."""
+    steps = []
+    for step, res, jobs in _mv_contract_run(spark, tmp_path):
+        assert (res, jobs) == _MV_CONTRACT[step], step
+        steps.append(step)
+    assert steps == list(_MV_CONTRACT)
 
 
 @pytest.mark.parametrize("mode", ["cow", "mor"])

@@ -483,3 +483,39 @@ def test_txn_high_water_survives_compact_and_delete(spark, tmp_path):
     sn.compact(spark, tbl, small_file_rows=10**6)
     assert sn.last_txn_version(tbl, "app") == 5
     assert sn.last_txn_version(tbl, "other") is None
+
+
+def test_stage_ordered_batches_keeps_caller_job_group(spark, tmp_path):
+    """The overlapped range writes of the stream-source staging run on
+    threads that inherit the caller's job group: every job of the call
+    is counted in it, and each batch file lands with its id range."""
+    import os
+
+    from aws_medallion_etl_spark.queries.snapshot_tokenize import (
+        _stage_ordered_batches,
+    )
+
+    src = str(tmp_path / "src")
+    os.makedirs(src)
+    sc = spark.sparkContext
+    sched = sc._jsc.sc().dagScheduler()
+    group = "stage-ordered-batches-job-group-test"
+    sc.setJobGroup(group, "_stage_ordered_batches under a job group")
+    try:
+        jobs0 = sched.numTotalJobs()
+        _stage_ordered_batches(spark.range(100), "id", src)
+        jobs = sched.numTotalJobs() - jobs0
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+    assert jobs > 0
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == jobs
+    ranges = [
+        spark.read.parquet(f"{src}/batch{i}.parquet")
+        .agg(F.min("id"), F.max("id")).first()
+        for i in range(4)
+    ]
+    assert [tuple(r) for r in ranges] == [(0, 24), (25, 49), (50, 74),
+                                           (75, 99)]
