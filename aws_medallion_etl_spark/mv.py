@@ -66,10 +66,10 @@ reading MVs through :func:`read_rollup`.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
 import functools
 from dataclasses import dataclass
 
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from aws_medallion_etl_spark import snapshot as snap

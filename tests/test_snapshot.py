@@ -2905,6 +2905,10 @@ def test_dml_verbs_contract(spark, tmp_path, mode, row_tracking):
     hist = [(h["version"], h["operation"], h["metrics"], h["n_files"],
              h["live_rows"]) for h in reversed(sn.snapshot_history(path))]
     assert hist == _dml_contract_history(mode, res["files_added"])
+    # zero-hit mints leave no staging dir behind
+    dels = os.path.join(path, sn._DELETES_DIR)
+    assert not [d for d in (os.listdir(dels) if os.path.isdir(dels) else [])
+                if d.startswith("stage-")]
 
 
 # ---------------------------------------------------------------------------
