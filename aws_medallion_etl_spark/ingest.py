@@ -13,7 +13,15 @@ pipeline actually runs. Per batch, corpus-proportional work is:
   the stored ``(id, cluster_id)`` frame (supernode contraction).
 
 Everything else — shingling, signatures, within-batch pairing — is
-O(batch). State lives in three parquet locations the caller owns:
+O(batch), and the batch is shingled and signed ONCE per call: one
+``fuzzy.BatchSketch`` (its ``(id, shingle)`` frame and MinHash
+signatures, checkpointed) feeds the band screen, the stop-shingle
+counts, both sides of the within-batch verify and the index append.
+The report's counts and fingerprint ride the writes and checkpoints
+the batch needs anyway, as ``Observation``s, and the stored tables are
+read with the schema in their parquet footers, so no Spark job runs
+just to count or to infer a schema. State lives in three parquet
+locations the caller owns:
 
 ``corpus_path``    the document table (appended per batch)
 ``index_path``     the MinHash band index (bands + shingle-DF log)
@@ -55,10 +63,13 @@ is run_date-partitioned.
 
 from __future__ import annotations
 
+import json
 import os
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Observation, functions as F
 
+from aws_medallion_etl_spark import io as eio
+from aws_medallion_etl_spark._ckpt import reclaim_scope
 from aws_medallion_etl_spark.operators import dq, fuzzy
 
 
@@ -99,8 +110,6 @@ def init_corpus(
         # definitions in one frame (see ingest_batch's validation).
         # SIBLING file, not inside the dir — per-batch label rewrites
         # use mode("overwrite"), which clears the directory.
-        import json
-
         with open(_clusters_meta_path(clusters_path), "w") as fh:
             json.dump({"threshold": threshold}, fh)
 
@@ -119,9 +128,6 @@ def adopt_threshold(clusters_path: str, threshold: float) -> None:
     changing a recorded threshold is exactly the definition-mixing the
     guard exists to prevent.
     """
-    import json
-    import os
-
     if not os.path.exists(clusters_path):
         raise ValueError(
             f"adopt_threshold: no labeling at {clusters_path} to adopt"
@@ -164,8 +170,6 @@ def ingest_batch(
     # plain dict is returned, so every localCheckpoint this batch takes
     # is dead on return — free the blocks deterministically instead of
     # letting each ingested batch tax the next one's heap (guide §5)
-    from aws_medallion_etl_spark._ckpt import reclaim_scope
-
     with reclaim_scope(spark.sparkContext):
         return _ingest_batch_impl(
             spark, batch, id_col, text_col, corpus_path, index_path,
@@ -185,29 +189,37 @@ def _ingest_batch_impl(
     threshold: float,
     max_shingle_df: int | None,
 ) -> dict:
-    corpus = spark.read.parquet(corpus_path)
-    n_batch = batch.count()
-    report: dict = {"policy": policy, "n_batch": n_batch}
+    corpus = eio.read_parquet_pinned(spark, corpus_path)
+    # the batch is shingled and signed once; every consumer below
+    # reads this sketch (reclaimed with the scope on return)
+    sketch = fuzzy.batch_sketch(batch, id_col, text_col, index_path)
+    appended = Observation()
 
     if policy == "filter":
+        # n_batch rides the checkpoint below: the kept rows are the
+        # batch minus its matches, so the plan reads every batch row
+        seen = Observation()
         kept = fuzzy.dedup_against_corpus_lsh(
-            spark, batch, corpus, id_col, text_col, index_path,
-            threshold=threshold, max_shingle_df=max_shingle_df,
+            spark, batch.observe(seen, F.count(F.lit(1)).alias("n")), corpus,
+            id_col, text_col, index_path,
+            threshold=threshold, max_shingle_df=max_shingle_df, sketch=sketch,
         ).localCheckpoint(eager=True)  # sever lineage BEFORE appending
         # to corpus_path — the screen's plan reads that same location
-        kept.write.mode("append").parquet(corpus_path)
-        fuzzy.append_to_minhash_index(spark, kept, id_col, text_col, index_path)
-        fp = dq.dataset_fingerprint(kept.select(id_col, text_col)).collect()[0]
-        report.update(
-            n_kept=fp["n_rows"],
-            n_dropped=n_batch - fp["n_rows"],
-            fingerprint=str(fp["fingerprint"]),
+        kept.observe(
+            appended, *dq.fingerprint_aggs([id_col, text_col])
+        ).write.mode("append").parquet(corpus_path)
+        fuzzy.append_to_minhash_index(
+            spark, kept, id_col, text_col, index_path,
+            sketch=sketch.restricted_to(kept.select(F.col(id_col).alias("__id"))),
         )
-        return report
+        n_batch, fp = seen.get["n"], appended.get
+        return {
+            "policy": policy, "n_batch": n_batch, "n_kept": fp["n_rows"],
+            "n_dropped": n_batch - fp["n_rows"],
+            "fingerprint": str(fp["fingerprint"]),
+        }
 
     # cluster policy: keep everything, fold edges into stored labels
-    import json
-
     if clusters_path is None:
         raise ValueError(
             "ingest_batch: policy='cluster' requires clusters_path"
@@ -241,34 +253,44 @@ def _ingest_batch_impl(
     # the SAME similarity definition — otherwise final clusters would
     # depend on which batch two near-dups happened to arrive in
     stop = fuzzy.index_stop_shingles(
-        spark, index_path, batch, corpus, id_col, text_col, max_shingle_df
+        spark, index_path, batch, corpus, id_col, text_col, max_shingle_df,
+        sketch=sketch,
     )
     cross = fuzzy.dedup_against_corpus_lsh(
         spark, batch, corpus, id_col, text_col, index_path,
         threshold=threshold, max_shingle_df=max_shingle_df,
-        return_pairs=True, stop_shingles=stop,
+        return_pairs=True, stop_shingles=stop, sketch=sketch,
     )
     internal = fuzzy.dedup_against_corpus(
-        batch, batch, id_col, text_col, threshold=threshold,
+        batch, batch, id_col, text_col, n=sketch.n, threshold=threshold,
         max_shingle_df=None, stop_shingles=stop, return_pairs=True,
+        sketch=sketch,
     ).where(F.col("id_a") < F.col("id_b"))
-    # materialize the union ONCE — it feeds the count and (inside
-    # merge_clusters) two consumers, and its lineage is the screen
+    # materialize the union ONCE — it feeds (inside merge_clusters) two
+    # consumers, and its lineage is the screen; its size is observed
+    # on the way
+    counted = Observation()
     edges = (
         cross.select("id_a", "id_b")
         .unionByName(internal.select("id_a", "id_b"))
         .distinct()
+        .observe(counted, F.count(F.lit(1)).alias("n"))
         .localCheckpoint(eager=True)
     )
-    n_edges = edges.count()
-    labels = spark.read.parquet(clusters_path)
+    labels = eio.read_parquet_pinned(spark, clusters_path)
     merged = fuzzy.merge_clusters(labels, edges).localCheckpoint(eager=True)
     merged.write.mode("overwrite").parquet(clusters_path)
-    batch.write.mode("append").parquet(corpus_path)
-    fuzzy.append_to_minhash_index(spark, batch, id_col, text_col, index_path)
-    fp = dq.dataset_fingerprint(batch.select(id_col, text_col)).collect()[0]
-    report.update(n_kept=n_batch, n_edges=n_edges, fingerprint=str(fp["fingerprint"]))
-    return report
+    batch.observe(
+        appended, *dq.fingerprint_aggs([id_col, text_col])
+    ).write.mode("append").parquet(corpus_path)
+    fuzzy.append_to_minhash_index(
+        spark, batch, id_col, text_col, index_path, sketch=sketch
+    )
+    fp = appended.get
+    return {
+        "policy": policy, "n_batch": fp["n_rows"], "n_kept": fp["n_rows"],
+        "n_edges": counted.get["n"], "fingerprint": str(fp["fingerprint"]),
+    }
 
 
 def export_canonical(
@@ -290,8 +312,6 @@ def export_canonical(
     ``n_corpus`` / ``n_canonical`` / ``fingerprint`` (of the exported
     ids) so consecutive exports diff as 1-row report compares.
     """
-    from aws_medallion_etl_spark import io as eio
-
     corpus = spark.read.parquet(corpus_path)
     labels = spark.read.parquet(clusters_path)
     tagged = fuzzy.canonical_docs(corpus, id_col, labels)

@@ -68,6 +68,44 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.parquet(path)
 
 
+def _footer_schema(path: str) -> StructType | None:
+    """The schema of an unpartitioned parquet table from ONE data file's
+    footer, read on the driver: the Spark schema Spark records in the
+    footer, else the footer's arrow schema. None when no footer can be
+    read."""
+    import glob
+
+    try:
+        import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import from_arrow_schema
+
+        files = sorted(
+            f for f in glob.glob(os.path.join(path, "*.parquet"))
+            if not os.path.basename(f).startswith(("_", "."))
+        )
+        if not files:
+            return None
+        md = pq.read_metadata(files[0])
+        spark_json = (md.metadata or {}).get(
+            b"org.apache.spark.sql.parquet.row.metadata"
+        )
+        if spark_json is not None:
+            return StructType.fromJson(json.loads(spark_json))
+        return from_arrow_schema(md.schema.to_arrow_schema())
+    except Exception:
+        return None
+
+
+def read_parquet_pinned(spark: SparkSession, path: str) -> DataFrame:
+    """Parquet scan of an UNPARTITIONED table (no ``key=value`` dirs)
+    with its schema taken from a data file's footer on the driver, so
+    the read runs no schema-inference job. Falls back to a plain
+    (inferring) read when no footer can be read."""
+    schema = _footer_schema(path)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(path)
+
+
 def with_provenance(
     df: DataFrame, run_date: str, source_system: str = "local"
 ) -> DataFrame:

@@ -253,7 +253,13 @@ def dataset_fingerprint(df: DataFrame, cols: list[str] | None = None) -> DataFra
     map-side partial sums — the cheapest full-table statement there
     is, and the shuffle carries one decimal per partition.
     """
-    cols = cols or df.columns
+    return df.agg(*fingerprint_aggs(cols or df.columns))
+
+
+def fingerprint_aggs(cols: list[str]) -> list:
+    """The two aggregates of :func:`dataset_fingerprint` over ``cols``
+    (``n_rows``, ``fingerprint``) — for callers that collect them off
+    an action they run anyway, e.g. as an ``Observation`` on a write."""
     canon = F.concat_ws(
         "\x1f", *[F.coalesce(F.col(c).cast("string"), F.lit("\x00")) for c in cols]
     )
@@ -261,10 +267,10 @@ def dataset_fingerprint(df: DataFrame, cols: list[str] | None = None) -> DataFra
     # the additive identity: an EMPTY frame fingerprints as 0, not
     # NULL — required for the shard-additivity contract and for the
     # report ledger (str(None) is not a checksum)
-    return df.agg(
+    return [
         F.count(F.lit(1)).alias("n_rows"),
         F.coalesce(F.sum(h), F.lit(0).cast("decimal(38,0)")).alias("fingerprint"),
-    )
+    ]
 
 
 def k_anonymity_report(

@@ -16,14 +16,21 @@ dedup at 100 TB. Design rules:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+import json
+import os
+from typing import NamedTuple
+
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
+
+from aws_medallion_etl_spark import io as _io
 
 # Delta-tracking of localCheckpoint storage blocks (no public
 # Dataset-level handle exists) — shared with the MV/ingest paths via
 # the dedicated module since round 14.
 from aws_medallion_etl_spark._ckpt import (
     persistent_rdd_ids as _persistent_rdd_ids,
+    reclaim_scope as _reclaim_scope,
     unpersist_rdd_ids as _unpersist_rdd_ids,
 )
 
@@ -133,16 +140,18 @@ def _df_histogram(df_counts: DataFrame, pairs_col) -> list:
     """Log2-bucketed document-frequency histogram of a per-shingle
     count frame: ~40 rows of (bucket, shingle types, candidate pairs)
     — the whole driver-side footprint of the density probe."""
-    return (
+    rows = (
         df_counts.where(F.col("__df") > 1)
         .groupBy(F.floor(F.log2("__df")).cast("int").alias("__b"))
         .agg(
             F.count(F.lit(1)).alias("__types"),
             F.sum(pairs_col).alias("__pairs"),
         )
-        .orderBy("__b")
         .collect()
     )
+    # <= 64 buckets: sorting them here spares a range-partition sample
+    # job and a shuffle per probe
+    return sorted(rows, key=lambda r: r["__b"])
 
 
 def _density_guard(
@@ -471,7 +480,6 @@ def minhash_bands(
     per document. The shared candidate-generation surface for
     self-dedup (:func:`minhash_lsh_pairs`) and the persisted
     incremental index (:func:`build_minhash_index`)."""
-    rows = num_hashes // bands
     sig = minhash_signatures(df, id_col, text_col, n, num_hashes)
     return _bands_from_signatures(sig, num_hashes, bands)
 
@@ -494,6 +502,95 @@ def _bands_from_signatures(sig: DataFrame, num_hashes: int, bands: int) -> DataF
     return sig.select("__id", band_struct).select(
         "__id", F.col("bb.band").alias("band"), F.col("bb.bhash").alias("bhash")
     )
+
+
+class BatchSketch(NamedTuple):
+    """One batch's shingles and MinHash signatures, built once by
+    :func:`batch_sketch` and handed through the ``sketch=`` argument to
+    every consumer of that batch — the band screen and the new side of
+    the verify (:func:`dedup_against_corpus_lsh`), a within-batch
+    verify (:func:`dedup_against_corpus` with the batch on both sides),
+    the batch's stop-shingle counts (:func:`index_stop_shingles`) and
+    the index append (:func:`append_to_minhash_index`) — so the batch
+    is scanned, exploded and de-duplicated once, not once per consumer.
+
+    ``shingles`` is the distinct ``(__id, shingle)`` frame and
+    ``signatures`` the ``(__id, signature)`` frame; both are lazy
+    ``localCheckpoint``s (the first action that reads one stores its
+    blocks). They live until the caller's ``_ckpt.reclaim_scope`` (or
+    its per-query reclaim) frees them, so a sketch must not outlive the
+    operation that built it.
+    """
+
+    shingles: DataFrame
+    signatures: DataFrame
+    n: int
+    num_hashes: int
+
+    def restricted_to(self, ids: DataFrame) -> "BatchSketch":
+        """The sketch of the documents whose id is in ``ids.__id``."""
+        return self._replace(
+            shingles=self.shingles.join(ids, "__id", "left_semi"),
+            signatures=self.signatures.join(ids, "__id", "left_semi"),
+        )
+
+
+def _index_params(path: str) -> dict:
+    """The hash parameters a MinHash band index was built with."""
+    with open(f"{path}/params.json") as fh:
+        return json.load(fh)
+
+
+def batch_sketch(
+    df: DataFrame, id_col: str, text_col: str, index_path: str
+) -> BatchSketch:
+    """The :class:`BatchSketch` of ``df`` at the hash parameters of the
+    band index at ``index_path``."""
+    params = _index_params(index_path)
+    sh = shingles(df, id_col, text_col, params["n"]).localCheckpoint(eager=False)
+    sig = _signatures_from_shingles(sh, params["num_hashes"]).localCheckpoint(
+        eager=False
+    )
+    return BatchSketch(sh, sig, params["n"], params["num_hashes"])
+
+
+def _sketch_for(
+    sketch: BatchSketch | None,
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    index_path: str,
+    op: str,
+) -> BatchSketch:
+    """``sketch`` checked against the index's hash parameters, or a new
+    sketch of ``df`` when the caller passed none."""
+    if sketch is None:
+        return batch_sketch(df, id_col, text_col, index_path)
+    params = _index_params(index_path)
+    if (sketch.n, sketch.num_hashes) != (params["n"], params["num_hashes"]):
+        raise ValueError(
+            f"{op}: sketch built at n={sketch.n}, num_hashes="
+            f"{sketch.num_hashes}; the index at {index_path} uses "
+            f"n={params['n']}, num_hashes={params['num_hashes']}"
+        )
+    return sketch
+
+
+def _sketch_shingles(
+    sketch: BatchSketch | None,
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    n: int,
+    op: str,
+) -> DataFrame:
+    """The ``(__id, shingle)`` frame of ``df``: the sketch's when the
+    caller passed one (built at the same ``n``), else shingled here."""
+    if sketch is None:
+        return shingles(df, id_col, text_col, n)
+    if sketch.n != n:
+        raise ValueError(f"{op}: sketch built at n={sketch.n}, asked for n={n}")
+    return sketch.shingles
 
 
 def minhash_lsh_pairs(
@@ -904,8 +1001,8 @@ def cluster_pairs(
     than the corpus.
 
     ``driver_cc=True`` (default, round 14): when the checkpointed edge
-    list fits :data:`_DRIVER_CC_SYM_ROWS` (a scalar count on the
-    already-materialized blocks — no recompute), the components come
+    list fits :data:`_DRIVER_CC_SYM_ROWS` (counted by an Observation
+    on the checkpoint itself — no extra action), the components come
     from ONE collect + union-find with min-member roots instead of the
     iterative loop — same labels exactly (min-label CC *is* union-find
     with min representatives; pinned by
@@ -924,8 +1021,16 @@ def cluster_pairs(
     # Checkpoint the symmetric edge list ONCE: every propagation round
     # joins against it, and without this each round would re-run the
     # (potentially expensive) pair-generation lineage feeding `pairs`.
+    # The driver path's size and NULL counts ride the checkpoint as an
+    # Observation, read only after the eager checkpoint has run.
+    stats_obs = Observation()
     sym = edges.union(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    ).observe(
+        stats_obs,
+        F.count(F.lit(1)).alias("n"),
+        F.count("src").alias("ns"),
+        F.count("dst").alias("nd"),
     ).localCheckpoint(eager=True)
     src_t = pairs.schema[id_a].dataType
     sym_rows = None
@@ -934,11 +1039,7 @@ def cluster_pairs(
         and _driver_cc_type_ok(src_t)
         and src_t == pairs.schema[id_b].dataType
     ):
-        stats = sym.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.count("src").alias("ns"),
-            F.count("dst").alias("nd"),
-        ).first()
+        stats = stats_obs.get
         sym_rows = stats["n"]
         # NULL endpoints never match the loop's equi-join (they keep
         # their own label); the union-find would conflate them — any
@@ -1211,6 +1312,8 @@ def dedup_against_corpus(
     return_pairs: bool = False,
     candidate_budget: int | None = DEFAULT_CANDIDATE_BUDGET,
     on_over_budget: str = "screen",
+    *,
+    sketch: BatchSketch | None = None,
 ) -> DataFrame:
     """Incremental near-dedup: keep the NEW batch's rows whose n-gram
     Jaccard against every EXISTING corpus document stays below
@@ -1238,29 +1341,35 @@ def dedup_against_corpus(
     the kept batch, so maintain it as a partitioned table and append;
     or screen first with stored :func:`minhash_signatures` bands and
     verify only band-colliding candidates.
+
+    ``sketch`` is the :class:`BatchSketch` of ``new_df`` (same ``n``);
+    its shingles replace shingling ``new_df`` here. When ``corpus_df``
+    is ``new_df`` itself (a within-batch verify) both sides read that
+    one shingle stream.
     """
-    sh_new = shingles(new_df, id_col, text_col, n)
-    sh_old = shingles(corpus_df, id_col, text_col, n)
-    if stop_shingles is not None:
-        sh_new = sh_new.join(
-            F.broadcast(stop_shingles.select("shingle")), "shingle", "left_anti"
-        )
-        sh_old = sh_old.join(
-            F.broadcast(stop_shingles.select("shingle")), "shingle", "left_anti"
-        )
-    elif max_shingle_df is not None:
+    same = corpus_df is new_df
+    sh_new = _sketch_shingles(
+        sketch, new_df, id_col, text_col, n, "dedup_against_corpus"
+    )
+    sh_old = sh_new if same else shingles(corpus_df, id_col, text_col, n)
+    if stop_shingles is None and max_shingle_df is not None:
         # Broadcast the bounded stop set (df > cap, at most
         # total_shingle_rows / cap entries) and left-anti — broadcasting
         # the rare complement would ship the whole shingle vocabulary.
-        stop = (
+        stop_shingles = (
             sh_new.select("shingle").unionAll(sh_old.select("shingle"))
             .groupBy("shingle")
             .agg(F.count(F.lit(1)).alias("__df"))
             .where(F.col("__df") > max_shingle_df)
-            .select("shingle")
         )
-        sh_new = sh_new.join(F.broadcast(stop), "shingle", "left_anti")
-        sh_old = sh_old.join(F.broadcast(stop), "shingle", "left_anti")
+
+    def cut(stop: DataFrame) -> tuple[DataFrame, DataFrame]:
+        stop = F.broadcast(stop.select("shingle"))
+        new = sh_new.join(stop, "shingle", "left_anti")
+        return new, (new if same else sh_old.join(stop, "shingle", "left_anti"))
+
+    if stop_shingles is not None:
+        sh_new, sh_old = cut(stop_shingles)
     if candidate_budget is not None:
         # cross-side admission (round-11): the candidate join's exact
         # row count is Sum over shingles of df_new * df_old — one
@@ -1268,9 +1377,10 @@ def dedup_against_corpus(
         # The screen cap applies to COMBINED df (both sides), matching
         # max_shingle_df's definition above. Lazy checkpoints make the
         # probe the streams' one materialization (see
-        # _blocked_pair_counts).
-        sh_new = sh_new.localCheckpoint(eager=False)
-        sh_old = sh_old.localCheckpoint(eager=False)
+        # _blocked_pair_counts); a sketch's shingles already are one.
+        if sketch is None or stop_shingles is not None:
+            sh_new = sh_new.localCheckpoint(eager=False)
+        sh_old = sh_new if same else sh_old.localCheckpoint(eager=False)
         cn = sh_new.groupBy("shingle").agg(F.count(F.lit(1)).alias("__dn"))
         co = sh_old.groupBy("shingle").agg(F.count(F.lit(1)).alias("__do"))
         both = cn.join(co, "shingle").select(
@@ -1283,9 +1393,7 @@ def dedup_against_corpus(
             hist, candidate_budget, on_over_budget, "dedup_against_corpus"
         )
         if cap is not None:
-            auto_stop = both.where(F.col("__df") > cap).select("shingle")
-            sh_new = sh_new.join(F.broadcast(auto_stop), "shingle", "left_anti")
-            sh_old = sh_old.join(F.broadcast(auto_stop), "shingle", "left_anti")
+            sh_new, sh_old = cut(both.where(F.col("__df") > cap))
     size_new = sh_new.groupBy("__id").agg(F.count(F.lit(1)).alias("__nn"))
     size_old = sh_old.groupBy("__id").agg(F.count(F.lit(1)).alias("__no"))
     inter = (
@@ -1346,9 +1454,6 @@ def build_minhash_index(
     group-sum by shingle — so maintenance is O(batch), never a
     vocabulary rewrite.
     """
-    import json
-    import os
-
     # One shingling pass feeds BOTH outputs: the (disk-spillable)
     # persist keeps the scan+explode+distinct from running twice —
     # build cost is amortized, but not doubling it is still free.
@@ -1390,41 +1495,47 @@ def append_to_minhash_index(
     id_col: str,
     text_col: str,
     path: str,
+    *,
+    sketch: BatchSketch | None = None,
 ) -> None:
     """Fold a kept batch into an existing MinHash band index so the
     NEXT batch dedups against corpus + this batch — the maintenance
     step that makes :func:`dedup_against_corpus_lsh` a continuous-
-    ingestion loop. Cost is O(batch): the batch is shingled once;
-    its bands and its shingle-DF increments are APPENDED (the DF
-    table is an increment log readers group-sum, so no vocabulary
-    rewrite). Hash parameters come from the stored sidecar, so the
-    appended bands are always generation-compatible.
+    ingestion loop. Cost is O(batch): its bands and its shingle-DF
+    increments are APPENDED (the DF table is an increment log readers
+    group-sum, so no vocabulary rewrite). Hash parameters come from
+    the stored sidecar, so the appended bands are always
+    generation-compatible.
+
+    The bands come from the batch's signatures and the DF increments
+    from its shingles: those of ``sketch`` (the batch's
+    :class:`BatchSketch`, as the ingest loop passes after screening
+    with it), else of a sketch built here — either way the batch is
+    shingled once.
 
     Not transactional: a crash between the two appends (or duplicate
     retries) leaves bands and DF stats inconsistent — rebuild the
     index with :func:`build_minhash_index` after a failed append.
     """
-    import json
-
-    with open(f"{path}/params.json") as fh:
-        params = json.load(fh)
-    sh = shingles(kept_batch, id_col, text_col, params["n"]).persist()
-    try:
-        sig = _signatures_from_shingles(sh, params["num_hashes"])
-        b = _bands_from_signatures(sig, params["num_hashes"], params["bands"])
-        # independent appends over the one persisted shingle frame —
-        # overlapped like the build's writes (guide §2.6). The crash
-        # contract is unchanged in kind: a failure mid-append already
-        # meant "rebuild the index" whichever append died first.
+    params = _index_params(path)
+    # frees a sketch built here once both appends ran; a caller's
+    # sketch predates the scope and stays the caller's
+    with _reclaim_scope(spark.sparkContext):
+        sk = _sketch_for(
+            sketch, kept_batch, id_col, text_col, path, "append_to_minhash_index"
+        )
+        b = _bands_from_signatures(sk.signatures, sk.num_hashes, params["bands"])
+        # independent appends over the one sketch — overlapped like
+        # the build's writes (guide §2.6). The crash contract is
+        # unchanged in kind: a failure mid-append already meant
+        # "rebuild the index" whichever append died first.
         _run_overlapped(
             spark,
             lambda: b.write.mode("append").parquet(f"{path}/bands"),
-            lambda: sh.groupBy("shingle")
+            lambda: sk.shingles.groupBy("shingle")
             .agg(F.count(F.lit(1)).alias("__df"))
             .write.mode("append").parquet(f"{path}/shingle_df"),
         )
-    finally:
-        sh.unpersist()
 
 
 def compact_minhash_index(spark, path: str, target_files: int = 32) -> None:
@@ -1438,8 +1549,6 @@ def compact_minhash_index(spark, path: str, target_files: int = 32) -> None:
     one file set per batch — this folds both back to a bounded file
     count with ``io.compact``'s crash-safe sibling staging.
     """
-    from aws_medallion_etl_spark import io as _io
-
     # the two tables compact independently (separate dirs, separate
     # staging siblings, separate swaps) — overlap the rewrites
     # (guide §2.6); each one's crash-safe stage+swap is untouched
@@ -1465,6 +1574,8 @@ def index_stop_shingles(
     id_col: str,
     text_col: str,
     max_shingle_df: int | None,
+    *,
+    sketch: BatchSketch | None = None,
 ) -> DataFrame | None:
     """The stop-shingle set (document frequency > cap over corpus +
     batch) for an index probe — corpus counts come from the persisted
@@ -1475,17 +1586,17 @@ def index_stop_shingles(
     (cross batch-vs-corpus AND within-batch, as ingest's cluster
     policy does) can compute the set once and apply ONE consistent
     similarity definition to all of them. Indexes that predate the
-    stats table fall back to re-shingling the corpus.
+    stats table fall back to re-shingling the corpus. The batch's
+    counts come from ``sketch``'s shingles when the caller passes the
+    batch's :class:`BatchSketch`.
     """
-    import json
-    import os
-
     if max_shingle_df is None:
         return None
-    with open(f"{index_path}/params.json") as fh:
-        params = json.load(fh)
+    params = _index_params(index_path)
     batch_stats = (
-        shingles(batch, id_col, text_col, params["n"])
+        _sketch_shingles(
+            sketch, batch, id_col, text_col, params["n"], "index_stop_shingles"
+        )
         .groupBy("shingle")
         .agg(F.count(F.lit(1)).alias("__df"))
     )
@@ -1495,7 +1606,7 @@ def index_stop_shingles(
         # full corpus+batch document frequencies, with zero corpus-text
         # reads (the stored table is pre-aggregated per generation;
         # group-sum merges the increment log)
-        corpus_stats = spark.read.parquet(df_path)
+        corpus_stats = _io.read_parquet_pinned(spark, df_path)
     else:
         # index predates the stats table: legacy full re-shingle
         corpus_stats = (
@@ -1529,7 +1640,6 @@ def _max_band_from_footers(bands_path: str) -> int | None:
     exactly as the Spark aggregate's NULL would.
     """
     import glob
-    import os
 
     try:
         import pyarrow.parquet as pq
@@ -1577,6 +1687,8 @@ def dedup_against_corpus_lsh(
     max_shingle_df: int | None = 10_000,
     return_pairs: bool = False,
     stop_shingles: DataFrame | None = None,
+    *,
+    sketch: BatchSketch | None = None,
 ) -> DataFrame:
     """Incremental near-dedup through a prebuilt MinHash band index:
     screen with the stored bands, verify exactly — the per-batch scale
@@ -1601,13 +1713,15 @@ def dedup_against_corpus_lsh(
     the candidate verify NO corpus text is read per batch. Indexes
     built before the stats table existed fall back to re-shingling
     the corpus for the cap.
-    """
-    import json
-    import os
 
-    with open(f"{index_path}/params.json") as fh:
-        params = json.load(fh)
-    idx = spark.read.parquet(f"{index_path}/bands")
+    The batch is shingled and signed once, as one :class:`BatchSketch`
+    that feeds the band screen, the stop-shingle counts and the new
+    side of the verify: ``sketch`` when the caller passes the batch's
+    (the ingest loop does, and reuses it for its within-batch verify
+    and index append), else one built here.
+    """
+    params = _index_params(index_path)
+    idx = _io.read_parquet_pinned(spark, f"{index_path}/bands")
     # cheap sidecar-vs-data sanity check: a crash between the bands
     # write and the sidecar replace can pair mismatched generations,
     # which would silently produce garbage candidates. Answered from
@@ -1626,9 +1740,11 @@ def dedup_against_corpus_lsh(
     # max_band is None on an EMPTY index (empty corpus) — a legitimate
     # state: the band join below yields no candidates and the whole
     # batch is kept, so no special-casing beyond skipping the check.
-    new_bands = minhash_bands(
-        new_df, id_col, text_col,
-        params["n"], params["num_hashes"], params["bands"],
+    sketch = _sketch_for(
+        sketch, new_df, id_col, text_col, index_path, "dedup_against_corpus_lsh"
+    )
+    new_bands = _bands_from_signatures(
+        sketch.signatures, sketch.num_hashes, params["bands"]
     )
     cand_ids = (
         idx.join(
@@ -1648,11 +1764,11 @@ def dedup_against_corpus_lsh(
     else:
         stop = index_stop_shingles(
             spark, index_path, new_df, corpus_df, id_col, text_col,
-            max_shingle_df,
+            max_shingle_df, sketch=sketch,
         )
     return dedup_against_corpus(
         new_df, corpus_cand, id_col, text_col,
         n=params["n"], threshold=threshold,
         max_shingle_df=None, stop_shingles=stop,
-        return_pairs=return_pairs,
+        return_pairs=return_pairs, sketch=sketch,
     )

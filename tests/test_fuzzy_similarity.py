@@ -922,7 +922,14 @@ def test_cluster_pairs_driver_path_guards(spark, monkeypatch):
     )
     expected = {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
 
-    got = {r.id: r.cluster_id for r in fuzzy.cluster_pairs(pairs).collect()}
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    jobs0 = dag.numTotalJobs()
+    labels = fuzzy.cluster_pairs(pairs)
+    # the edge checkpoint and the collect; the size and NULL counts
+    # ride the checkpoint as an Observation (4 jobs with a separate
+    # count aggregate)
+    assert dag.numTotalJobs() - jobs0 == 2
+    got = {r.id: r.cluster_id for r in labels.collect()}
     assert got == expected
     assert fuzzy.last_cc_path() == {"path": "driver", "sym_rows": 6}
     # over-budget -> distributed
@@ -935,7 +942,7 @@ def test_cluster_pairs_driver_path_guards(spark, monkeypatch):
     # NULL; union-find would conflate them)
     np_ = spark.createDataFrame([(1, 2), (None, 3)], "id_a bigint, id_b bigint")
     fuzzy.cluster_pairs(np_).collect()
-    assert fuzzy.last_cc_path()["path"] == "distributed"
+    assert fuzzy.last_cc_path() == {"path": "distributed", "sym_rows": 4}
     # non-integral/string id type -> distributed, ruled out pre-count
     dbl = pairs.selectExpr("cast(id_a as double) id_a",
                            "cast(id_b as double) id_b")

@@ -161,3 +161,56 @@ def test_ingest_edge_cases(spark, sf_dir, tmp_path):
         ingest.adopt_threshold(clu_p, 0.7)
     with _pytest.raises(ValueError, match="no labeling"):
         ingest.adopt_threshold(str(tmp_path / "nope"), 0.8)
+
+
+# Per ingest_batch call of test_ingest_contract: the report without its
+# fingerprint, and the Spark jobs the call runs (68 / 82 / 46 before the
+# batch was shingled and signed once per call and the counts and the
+# fingerprint rode the writes; the reports are unchanged).
+_INGEST_CONTRACT = [
+    ({"policy": "cluster", "n_batch": 125, "n_kept": 125, "n_edges": 7}, 41),
+    ({"policy": "cluster", "n_batch": 125, "n_kept": 125, "n_edges": 9}, 53),
+    ({"policy": "filter", "n_batch": 250, "n_kept": 239, "n_dropped": 11}, 34),
+]
+
+
+def test_ingest_contract(spark, sf_dir, tmp_path):
+    """Two cluster-policy batches and one filter-policy batch keep their
+    exact report dicts and Spark jobs per call; each fingerprint equals
+    ``dq.dataset_fingerprint`` of the rows the call appended, and the
+    labels equal connected components over exact Jaccard pairs."""
+    from aws_medallion_etl_spark.operators import dq
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
+    corpus0 = docs.filter(F.col("doc_id") % 2 == 0)
+    corpus_p, idx_p, clu_p = _paths(tmp_path)
+    f_corpus_p, f_idx_p = str(tmp_path / "f_corpus"), str(tmp_path / "f_idx")
+    ingest.init_corpus(
+        spark, corpus0, "doc_id", "text", corpus_p, idx_p, clusters_path=clu_p
+    )
+    ingest.init_corpus(spark, corpus0, "doc_id", "text", f_corpus_p, f_idx_p)
+    calls = [  # (batch, state paths, policy, max_shingle_df)
+        (F.col("doc_id") % 4 == 1, (corpus_p, idx_p, clu_p), "cluster", None),
+        (F.col("doc_id") % 4 == 3, (corpus_p, idx_p, clu_p), "cluster", 10_000),
+        (F.col("doc_id") % 2 == 1, (f_corpus_p, f_idx_p, None), "filter", 10_000),
+    ]
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    for (cond, paths, policy, cap), (want, want_jobs) in zip(
+        calls, _INGEST_CONTRACT, strict=True
+    ):
+        jobs0 = dag.numTotalJobs()
+        rep = ingest.ingest_batch(
+            spark, docs.where(cond), "doc_id", "text", *paths,
+            policy=policy, max_shingle_df=cap,
+        )
+        jobs = dag.numTotalJobs() - jobs0
+        fp = rep.pop("fingerprint")
+        assert (rep, jobs) == (want, want_jobs), policy
+        appended = spark.read.parquet(paths[0]).where(cond)
+        assert fp == str(dq.dataset_fingerprint(appended).first()["fingerprint"])
+
+    got = {tuple(r) for r in spark.read.parquet(clu_p).collect()}
+    want = {tuple(r) for r in fuzzy.cluster_pairs(fuzzy.ngram_jaccard_pairs(
+        docs, "doc_id", "text", threshold=0.8, max_shingle_df=None
+    )).collect()}
+    assert got == want
